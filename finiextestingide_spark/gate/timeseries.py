@@ -1393,8 +1393,8 @@ _SLL_TP = 40.0
 def streaming_live_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The live stateful session driving the R3 resting-order surface
     (streaming/live_replay.live_backtest with entry_type=limit +
-    sl_dist/tp_dist): the limit entry RESTS in the state tuple across
-    micro-batches, fills AT the limit when the ask touches it, and the
+    sl_dist/tp_dist): the limit entry RESTS in the pickled session's
+    resting book across micro-batches, fills AT the limit when the ask touches it, and the
     position exits at the SL/TP LEVEL on the close-side mark — the same
     contract the batch replay_limit_oracle gate pins
     (trade_simulator.py:610-686 fill-at-limit;

@@ -13,7 +13,7 @@ Two engine forms:
 
 - ``ClippingMonitor`` — the per-session fold, reference-parity arithmetic,
   plain picklable data so it rides INSIDE a live session's streaming state
-  (``live_backtest_generic(clipping=True)`` attaches one per key and wraps
+  (``live_backtest(clipping=True)`` attaches one per key and wraps
   every ``process_tick`` with a perf_counter_ns measurement; arrival time
   is the wire's ``collected_msc`` ingest clock, the reference's tick_delta
   source). Unlike the reference, the raw per-tick time list is BOUNDED

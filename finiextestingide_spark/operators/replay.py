@@ -785,8 +785,8 @@ class ReplaySession:
     its live autotrader loop (tick_pipeline_core.py:1-16 — "one tick in,
     bars/decision/execution out"); this class is the engine's analogue.
     ``_replay_core`` drives it in a loop over a scenario's tick arrays; the
-    generic live operator (streaming/live_replay.live_backtest_generic)
-    pickles ONE session per symbol into Structured Streaming state and
+    live operator (streaming/live_replay.live_backtest) pickles ONE
+    session per symbol into Structured Streaming state and
     feeds it each micro-batch — so every strategy and every feature of the
     batch surface (resting orders, modify/cancel, maker/taker + flat fees,
     spot dual-balance, margin gate, swap accrual, stress rejection, stale

@@ -304,7 +304,6 @@ def bigram_logprob_scores(
     *,
     id_col: str = "doc_id",
     text: str = "text",
-    reuse_model: bool = False,
 ) -> DataFrame:
     """Corpus-trained INTERPOLATED unigram/bigram language-model score per
     document — the next step from `unigram_logprob_scores` toward the
@@ -352,16 +351,6 @@ def bigram_logprob_scores(
         F.split(normalized_text(F.col(text)), " "), lambda x: x != ""
     )
     toks = docs.select(F.col(id_col), ws.alias("__ws"))
-    if reuse_model:
-        # r16 (VERDICT r15 #7 — LM-ladder symmetry with the order-N
-        # scorer's reuse_model): the token frame feeds FOUR differently-
-        # keyed consumers (uni, n_total, bi/prefix via pairs, and the
-        # scored join's left side); their exchanges share no key, so
-        # ReuseExchange cannot collapse them and the corpus is tokenized
-        # up to 4x. One EAGER localCheckpoint makes every consumer read
-        # the materialized arrays (per-invocation, inside the timed run —
-        # never plan-matched across queries).
-        toks = toks.localCheckpoint()
     words = toks.select(F.explode("__ws").alias("w"))
     uni = words.groupBy("w").agg(F.count(F.lit(1)).alias("__cw"))
     n_total = words.select(F.count(F.lit(1)).alias("__n"))
@@ -645,7 +634,6 @@ def modified_kneser_ney_logprob_scores(
     *,
     id_col: str = "doc_id",
     text: str = "text",
-    reuse_model: bool = False,
 ) -> DataFrame:
     """Corpus-trained MODIFIED Kneser-Ney bigram score per document — the
     Chen & Goodman (1998) three-discount refinement KenLM actually ships,
@@ -687,15 +675,6 @@ def modified_kneser_ney_logprob_scores(
         F.split(normalized_text(F.col(text)), " "), lambda x: x != ""
     )
     toks = docs.select(F.col(id_col), ws.alias("__ws"))
-    if reuse_model:
-        # r16 (VERDICT r15 #7): the transition stream is consumed by the
-        # bigram-count build AND the scored join, and the bigram count
-        # table `bi` by FOUR differently-keyed consumers (left/right/cc
-        # roll-ups + the scored join) — none of those exchanges share a
-        # key, so without materialization the corpus is re-tokenized and
-        # re-counted per consumer. Eager localCheckpoints, same contract
-        # as ngram_mkn_logprob_scores(reuse_model=True).
-        toks = toks.localCheckpoint()
     pairs = toks.where(F.size("__ws") >= 2).select(
         F.col(id_col),
         F.explode(
@@ -708,8 +687,6 @@ def modified_kneser_ney_logprob_scores(
         id_col, F.col("__p.0").alias("w1"), F.col("__p.1").alias("w2")
     )
     bi = pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("__c12"))
-    if reuse_model:
-        bi = bi.localCheckpoint()
     left = bi.groupBy("w1").agg(
         F.sum("__c12").alias("__c1"),
         F.sum(F.when(F.col("__c12") == 1, 1).otherwise(0)).alias("__nn1"),
@@ -808,7 +785,6 @@ def trigram_mkn_logprob_scores(
     *,
     id_col: str = "doc_id",
     text: str = "text",
-    reuse_model: bool = False,
 ) -> DataFrame:
     """Corpus-trained TRIGRAM modified-Kneser-Ney score per document — the
     order-3 step of the KenLM ladder (unigram -> interpolated bigram ->
@@ -845,13 +821,6 @@ def trigram_mkn_logprob_scores(
         F.split(normalized_text(F.col(text)), " "), lambda x: x != ""
     )
     toks = docs.select(F.col(id_col), ws.alias("__ws"))
-    if reuse_model:
-        # r16 (VERDICT r15 #7): `tri` feeds four differently-keyed
-        # consumers (h, cc2, the d3 count-of-counts, the scored join) and
-        # `cc2` another four (w2r, ctx1, d2, scored) — eager
-        # localCheckpoints stop each roll-up from re-deriving the corpus
-        # pass; same contract as ngram_mkn_logprob_scores(reuse_model=True).
-        toks = toks.localCheckpoint()
     trips = toks.where(F.size("__ws") >= 3).select(
         F.col(id_col),
         F.explode(
@@ -868,8 +837,6 @@ def trigram_mkn_logprob_scores(
         F.col("__t.2").alias("w3"),
     )
     tri = trips.groupBy("w1", "w2", "w3").agg(F.count(F.lit(1)).alias("__c3"))
-    if reuse_model:
-        tri = tri.localCheckpoint()
     h = tri.groupBy("w1", "w2").agg(
         F.sum("__c3").alias("__h"),
         F.sum(F.when(F.col("__c3") == 1, 1).otherwise(0)).alias("__hn1"),
@@ -879,8 +846,6 @@ def trigram_mkn_logprob_scores(
     # tri rows are DISTINCT (w1,w2,w3), so count(*) per (w2,w3) IS the
     # continuation count |{w1}|
     cc2 = tri.groupBy("w2", "w3").agg(F.count(F.lit(1)).alias("__cc2"))
-    if reuse_model:
-        cc2 = cc2.localCheckpoint()
     w2r = cc2.groupBy("w2").agg(
         F.sum("__cc2").alias("__t2"),
         F.sum(F.when(F.col("__cc2") == 1, 1).otherwise(0)).alias("__wn1"),

@@ -17,6 +17,11 @@ Design notes (100 TB posture):
 - Session timezone pinned to UTC: the reference converts everything to UTC
   at ingest (reference: python/data_management/importers/tick_importer.py:413-450);
   we do the same at the session level.
+- ``spark.executorEnv.PYTHONPATH`` carries the package's parent directory
+  (merged ahead of any caller-supplied value): without it Python workers
+  find the package only through the driver's working directory, and a
+  run started outside the repo fails in the worker with
+  ``ModuleNotFoundError``.
 """
 
 from __future__ import annotations
@@ -24,6 +29,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+#: the directory that holds the ``finiextestingide_spark`` package
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def default_parallelism() -> int:
@@ -37,6 +45,10 @@ def build_session(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     cpus = default_parallelism()
+    conf = dict(extra_conf or {})
+    worker_path = os.pathsep.join(
+        p for p in (_PACKAGE_PARENT, conf.pop("spark.executorEnv.PYTHONPATH", None)) if p
+    )
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
@@ -51,7 +63,8 @@ def build_session(
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.executorEnv.PYTHONPATH", worker_path)
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -8,77 +8,46 @@ its parity suite pins that the two pipelines produce identical trade
 records on the same input (tests/parity/test_trade_records_parity.py).
 
 Engine mapping: ``live_backtest`` keys the tick stream by symbol and runs
-the replay's order surface inside ``applyInPandasWithState`` — per-key
-state carries exactly what the reference's live loop holds in memory: the
-forming bar bucket, the strategy's close window (and its pyramiding slot
-count), the current target, the open-position BOOK with running MAE/MFE
-per position, the latency FIFO, the RESTING-ORDER book (limit/stop/
-stop_limit entries with their scheduled modify/cancel ops), the latest
-as-of signal, and the serialized rng state. A trade record is emitted the
-moment its position closes; final open positions never close (a live
-session has no END), which is precisely the difference the parity tests
-must allow for.
-
-Tick-loop ordering mirrors operators/replay._replay_core bit-for-bit:
-Phase 0 resolves modify/cancel ops scheduled on earlier ticks (#318) ->
-bar close on the first tick of a later bucket -> resting-order lifecycle
-bookkeeping (bars-rested counters schedule cancel/modify ops) -> strategy
-decision (one rng draw per decision that queues order actions; a
-target-model flip cancels ALL resting entries before queueing its own) ->
-Phase 1 drains the latency FIFO head-first (FIFO by SUBMISSION — a later
-order with a shorter draw still waits for the head): non-market entries
-REGISTER in the resting book, market opens fill or capacity-drop ->
-Phases 2/3 evaluate price triggers on resting entries (LONG limit fills
-AT the limit once ask <= limit; stops break out and fill at market; a
-triggered STOP_LIMIT converts to a limit at its stored limit price and
-may fill the same tick; a triggered order at book capacity WAITS, keeps
-resting — trade_simulator.py:161-193,610-686) -> per-tick excursion
-update AFTER fills so the entry tick's spread lands in MAE -> broker-side
-SL/TP on the close-side mark, filled AT the level.
-
-Closes are stored as array<double> state, so the SMA arithmetic runs over
-the exact same float64 values in both pipelines; excursion prices anchor
-at the entry when a side never leaves zero (the batch contract).
+``applyInPandasWithState`` whose per-key state is one pickled
+``operators.replay.ReplaySession`` — the per-tick state machine the batch
+replay drives. This operator, the cold-start snapshot producers
+(``bootstrap_live_sessions``/``bootstrap_account_sessions``) and the
+account-scoped ``live_backtest_account`` fold their events into that one
+class through ``_drive_session_rows``, so batch/live parity holds by
+construction: there is no second implementation of the tick loop to
+drift. A trade record is emitted the moment its position closes; final
+open positions never close (a live session has no END), which is
+precisely the difference the parity tests must allow for.
 
 Wire contract: ticks carry ``(symbol, timestamp, time_msc, bid, ask)``
 with ``time_msc`` = epoch-milliseconds event time — the engine CLOCK,
 exactly as in the batch core (bar bucketing, latency deadlines and trade
-timestamps all run on it). An optional ``tick_seq`` column (ingest
-sequence) joins the sort key. Ticks are totally ordered per symbol with
-the batch core's exact precedence — ``(time_msc, tick_seq, timestamp,
-collected_msc, bid, ask)`` over whichever columns are present — so
-intra-millisecond ties resolve identically in both pipelines and the
-live-vs-oracle hash gate is not data-dependent (reference bug #385 is
-tick-order instability).
+timestamps all run on it). Optional ``tick_seq`` (ingest sequence) and
+``collected_msc`` (arrival clock) columns join the sort key. Ticks are
+totally ordered per symbol with the batch core's exact precedence —
+``(time_msc, tick_seq, timestamp, collected_msc, bid, ask)`` over
+whichever columns are present — so intra-millisecond ties resolve
+identically in both pipelines and the live-vs-oracle hash gate is not
+data-dependent (reference bug #385 is tick-order instability).
 
 Signals (W7 live, the reference's llm_sentiment worker running inside the
 live loop — core/llm_sentiment_worker.py:73-107): pass ``signals`` (a
 stream of ``symbol, sig_ts, score``) and the operator unions it into the
 keyed stream; each micro-batch merges in event-time order with
 signal-first at equal time (the as-of at-or-before contract, same as
-streaming/asof_stream). State tracks the latest signal; the
-``signal_follow`` strategy decides from it with staleness gating, and
-every trade record stamps the signal that drove its entry decision
-(``entry_sig_ts``/``entry_sig_score``) so the resolution is directly
-checkable against the batch as-of join. Arrival-order contract: state
-only moves forward — a signal arriving after a later-stamped tick was
-already processed applies from the next tick on, exactly like the
-reference's queue-fed loop.
+streaming/asof_stream). The session tracks the latest signal
+(``ReplaySession.process_signal``); ``signal_follow`` decides from it
+with staleness gating, and every trade record stamps the signal that
+drove its entry decision (``entry_sig_ts``/``entry_sig_score``) so the
+resolution is directly checkable against the batch as-of join.
+Arrival-order contract: state only moves forward — a signal arriving
+after a later-stamped tick was already processed applies from the next
+tick on, exactly like the reference's queue-fed loop.
 
-Scope (honest): the target-model strategies — sma_cross, buy_hold,
-rsi_reversion, signal_follow — and the action-model pyramid (slot cap
-defaulting to the batch Pyramid's own 3 while the engine fill capacity
-defaults to 1, mirroring _replay_core), each with the FULL entry surface
-(market/limit/stop/stop_limit via ``entry_type``/``entry_offset``/
-``limit_offset``), the #318 modify/cancel lifecycle
-(``modify_after_bars``/``modify_delta``/``cancel_after_bars``/
-``modify_cancel_delay_ms``), ``price_digits`` submission snapping, and
-relative broker-side SL/TP. Every OTHER strategy (recursive EMA state,
-ctx strategies, action ladders, plugins) auto-delegates to
-``live_backtest_generic`` — the pickled-ReplaySession path sharing the
-batch state machine literally — so ``live_backtest`` is one entry point
-for the engine's whole strategy surface. Account-global portfolio state
-(multi-symbol margin) is ``live_backtest_account`` in this module.
+Restart contract: the per-key state schema is one ``blob`` column (the
+pickled session). A checkpoint resumes only under that layout; a
+checkpoint whose state store holds any other per-symbol schema must be
+restarted cold or seeded through ``bootstrap``.
 """
 
 from __future__ import annotations
@@ -93,7 +62,6 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
-    ArrayType,
     BinaryType,
     DoubleType,
     IntegerType,
@@ -129,136 +97,9 @@ TRADE_SCHEMA = StructType(
     ]
 )
 
-_NO_SIG = -(2**62)
-
 # #197 periodic clipping reports land here on the EXECUTOR (operational
 # telemetry, the reference's [CLIPPING] log channel)
 _CLIP_LOG = logging.getLogger("finiextestingide_spark.clipping")
-
-# live_backtest's native transparent-state strategies; everything else
-# (recursive-EMA/ctx/action strategies, plugins) auto-delegates to the
-# pickled-ReplaySession generic path — one live entry point, full surface
-_NATIVE_LIVE_STRATEGIES = frozenset(
-    {"sma_cross", "buy_hold", "rsi_reversion", "pyramid", "signal_follow"}
-)
-
-# Order-type codes shared by the pending/resting parallel arrays
-_OT_MARKET, _OT_LIMIT, _OT_STOP, _OT_STOP_LIMIT = 0, 1, 2, 3
-_OTYPE_CODE = {"market": _OT_MARKET, "limit": _OT_LIMIT, "stop": _OT_STOP,
-               "stop_limit": _OT_STOP_LIMIT}
-# Scheduled-op codes on resting orders (#318)
-_OP_NONE, _OP_CANCEL, _OP_MODIFY = -1, 0, 1
-
-_STATE_SCHEMA = StructType(
-    [
-        StructField("bucket", LongType()),        # forming bar's bucket start ms; -1 none
-        StructField("cur_close", DoubleType()),   # forming bar's latest mid
-        StructField("closes", ArrayType(DoubleType())),  # closed-bar closes (trimmed)
-        StructField("target", IntegerType()),     # target-model strategy state
-        StructField("open_count", IntegerType()),  # pyramid slot count (incl. in-flight)
-        # the open-position book, oldest first (parallel arrays)
-        StructField("p_dir", ArrayType(IntegerType())),
-        StructField("p_lots", ArrayType(DoubleType())),
-        StructField("p_entry_ms", ArrayType(LongType())),
-        StructField("p_entry_price", ArrayType(DoubleType())),
-        StructField("p_fees", ArrayType(DoubleType())),
-        StructField("p_mae", ArrayType(DoubleType())),
-        StructField("p_mfe", ArrayType(DoubleType())),
-        StructField("p_maep", ArrayType(DoubleType())),
-        StructField("p_mfep", ArrayType(DoubleType())),
-        StructField("p_sig_ms", ArrayType(LongType())),   # entry-decision signal
-        StructField("p_sig_val", ArrayType(DoubleType())),
-        StructField("trade_count", IntegerType()),
-        # seeded latency queue (R2): FIFO of in-flight actions
-        StructField("pend_due", ArrayType(LongType())),
-        StructField("pend_kind", ArrayType(IntegerType())),  # 0 close_all, 1 open
-        StructField("pend_dir", ArrayType(IntegerType())),
-        StructField("pend_otype", ArrayType(IntegerType())),
-        StructField("pend_trig", ArrayType(DoubleType())),   # NaN = market
-        StructField("pend_lim", ArrayType(DoubleType())),    # NaN = none
-        StructField("pend_sig_ms", ArrayType(LongType())),
-        StructField("pend_sig_val", ArrayType(DoubleType())),
-        # resting-order book (R3): latency-resolved limit/stop/stop_limit
-        # entries awaiting a price trigger, each with at most one scheduled
-        # in-flight modify/cancel op (#318)
-        StructField("r_dir", ArrayType(IntegerType())),
-        StructField("r_otype", ArrayType(IntegerType())),
-        StructField("r_trig", ArrayType(DoubleType())),
-        StructField("r_lim", ArrayType(DoubleType())),       # NaN = none
-        StructField("r_bars", ArrayType(IntegerType())),     # bars rested un-triggered
-        StructField("r_modified", ArrayType(IntegerType())),
-        StructField("r_opk", ArrayType(IntegerType())),      # -1 none, 0 cancel, 1 modify
-        StructField("r_op_ms", ArrayType(LongType())),
-        StructField("r_op_trig", ArrayType(DoubleType())),
-        StructField("r_sig_ms", ArrayType(LongType())),
-        StructField("r_sig_val", ArrayType(DoubleType())),
-        # rng: draw count (observability) + the serialized Mersenne state —
-        # O(1) restore per micro-batch regardless of session-lifetime draw
-        # count (pickle of rng.getstate(); a months-lived session must not
-        # pay O(total draws) per batch)
-        StructField("n_draws", IntegerType()),
-        StructField("rng_state", BinaryType()),
-        # latest as-of signal (W7): _NO_SIG ms = none yet
-        StructField("sig_ms", LongType()),
-        StructField("sig_val", DoubleType()),
-    ]
-)
-
-
-class _Pos:
-    __slots__ = ("dir", "lots", "entry_ms", "entry_price", "fees", "mae", "mfe",
-                 "maep", "mfep", "sig_ms", "sig_val")
-
-    def __init__(self, dir, lots, entry_ms, entry_price, fees, mae, mfe, maep, mfep,
-                 sig_ms=_NO_SIG, sig_val=float("nan")):
-        self.dir, self.lots = dir, lots
-        self.entry_ms, self.entry_price, self.fees = entry_ms, entry_price, fees
-        self.mae, self.mfe, self.maep, self.mfep = mae, mfe, maep, mfep
-        self.sig_ms, self.sig_val = sig_ms, sig_val
-
-
-class _Resting:
-    __slots__ = ("dir", "otype", "trig", "lim", "bars", "modified", "opk",
-                 "op_ms", "op_trig", "sig_ms", "sig_val")
-
-    def __init__(self, dir, otype, trig, lim, bars, modified, opk, op_ms, op_trig,
-                 sig_ms, sig_val):
-        self.dir, self.otype, self.trig, self.lim = dir, otype, trig, lim
-        self.bars, self.modified = bars, modified
-        self.opk, self.op_ms, self.op_trig = opk, op_ms, op_trig
-        self.sig_ms, self.sig_val = sig_ms, sig_val
-
-
-def _decide(closes: list[float], target: int, params: dict) -> int:
-    """Target-model decision from the stored close window + held target —
-    the same arithmetic as the batch strategies (operators/replay.SmaCross
-    after the round-6 fresh-window fix; RsiReversion's SMA-flavor RSI with
-    hold-previous semantics, whose only cross-bar state is the previous
-    target and the last period+1 closes — both already in the state tuple).
-    buy_hold -> 1."""
-    strat = params.get("strategy", "sma_cross")
-    if strat == "buy_hold":
-        return 1
-    if strat == "rsi_reversion":
-        period = int(params.get("period", 14))
-        buy_below = float(params.get("buy_below", 30.0))
-        sell_above = float(params.get("sell_above", 70.0))
-        if len(closes) < period + 1:
-            return target
-        window = [closes[i] - closes[i - 1] for i in range(len(closes) - period, len(closes))]
-        gain = sum(d for d in window if d > 0) / period
-        loss = sum(-d for d in window if d < 0) / period
-        rsi = 100.0 if loss == 0 else 100.0 - 100.0 / (1.0 + gain / loss)
-        if rsi < buy_below:
-            return 1
-        if rsi > sell_above:
-            return -1
-        return target
-    fast = int(params.get("fast", 5))
-    slow = int(params.get("slow", 20))
-    if len(closes) < slow:
-        return 0
-    return 1 if sum(closes[-fast:]) / fast > sum(closes[-slow:]) / slow else -1
 
 
 def _merge_signals(ticks: DataFrame, signals: DataFrame) -> DataFrame:
@@ -266,8 +107,8 @@ def _merge_signals(ticks: DataFrame, signals: DataFrame) -> DataFrame:
     NaN quotes, a discriminator, and time_msc derived from sig_ts.
     Mirrors the batch ``merge_signal_rows`` (operators/replay.py): when
     the tick stream carries ``collected_msc``, signal rows get it stamped
-    from sig_ts too — a null there would break the generic session path's
-    int64 cast on the documented optional-column wire contract."""
+    from sig_ts too — a null there would break the session drive's int64
+    cast on the documented optional-column wire contract."""
     sig = signals.select(
         F.col("symbol"),
         F.col("sig_ts").alias("timestamp"),
@@ -287,520 +128,7 @@ def _merge_signals(ticks: DataFrame, signals: DataFrame) -> DataFrame:
     )
     return t.unionByName(sig, allowMissingColumns=True)
 
-
-def live_backtest(
-    ticks: DataFrame,
-    params: dict,
-    *,
-    latency_seed: int = 0,
-    latency_min_ms: int = 0,
-    latency_max_ms: int = 0,
-    timeout_ms: int = 0,
-    signals: DataFrame | None = None,
-    bootstrap: DataFrame | None = None,
-    bootstrap_dir: str | None = None,
-    max_age_trading_days: int = 0,
-    weekend_aware: bool = True,
-    restore_now=None,
-    on_stale: str = "warn",
-) -> DataFrame:
-    """ticks(symbol, timestamp, time_msc, bid, ask[, tick_seq]) STREAM ->
-    trade-record stream, one row per closed trade, per-symbol state = the
-    live loop's in-memory session. ``params`` is the scenario's parameters
-    map (strategy/fast/slow/bar_ms/lots/contract_size/fee_per_side/
-    max_positions/sl_dist/tp_dist/entry_type/entry_offset/limit_offset/
-    modify_after_bars/modify_delta/cancel_after_bars/
-    modify_cancel_delay_ms/price_digits/signal_threshold/
-    signal_max_age_ms). ``time_msc`` (epoch ms) is the engine clock.
-
-    Seeded latency (R2): with ``latency_max_ms > 0`` every decision that
-    queues order actions draws one delay from
-    random.Random(latency_seed).randint(min, max) — the batch core's exact
-    call sequence — and the actions rest in a FIFO drained head-first once
-    the tick clock passes each deadline. The generator's full Mersenne
-    state rides in the state tuple (pickled getstate), so restoring it per
-    micro-batch is O(1) in the session's lifetime draw count while staying
-    bit-identical to the batch run's sequence.
-
-    ``signals``: optional (symbol, sig_ts, score) stream unioned into the
-    keyed session (see module docstring for the merge/arrival contract).
-
-    Strategies outside this operator's native transparent-state set
-    (sma_cross/buy_hold/rsi_reversion/pyramid/signal_follow) delegate to
-    ``live_backtest_generic`` — the pickled-ReplaySession path — so ONE
-    entry point runs the engine's ENTIRE strategy surface live
-    (macd_cross's recursive EMA state, consensus, scale_out ladders,
-    trend_channel's per-tick management, entry-point plugins whose
-    modules are importable on executors).
-
-    ``timeout_ms > 0`` also routes through the generic path, for EVERY
-    strategy: processing-time firings there drive the R8 ghost pass
-    (``ReplaySession.heartbeat`` — in-gap latency fills resolve in real
-    time with batch parity; requires ``heartbeat_ms`` in params). The
-    native branch's own timeout handling is kept only as a defensive
-    no-op: its typed state carries no gap anchor (prev quotes), and the
-    historical remove-state-on-idle behavior would silently discard a
-    live session's open positions the moment the feed resumed.
-
-    ``bootstrap``/``bootstrap_dir`` (cold-start recovery from a
-    ``bootstrap_live_sessions`` snapshot — see ``live_backtest_generic``)
-    also route through the generic path: the snapshot is a pickled
-    ``ReplaySession``, the generic path's exact state form."""
-    strat_name = params.get("strategy", "sma_cross")
-    if (
-        strat_name not in _NATIVE_LIVE_STRATEGIES
-        or timeout_ms > 0
-        or bootstrap is not None
-    ):
-        return live_backtest_generic(
-            ticks,
-            params,
-            latency_seed=latency_seed,
-            latency_min_ms=latency_min_ms,
-            latency_max_ms=latency_max_ms,
-            timeout_ms=timeout_ms,
-            signals=signals,
-            bootstrap=bootstrap,
-            bootstrap_dir=bootstrap_dir,
-            max_age_trading_days=max_age_trading_days,
-            weekend_aware=weekend_aware,
-            restore_now=restore_now,
-            on_stale=on_stale,
-        )
-    bar_ms = int(params.get("bar_ms", 60_000))
-    lots = float(params.get("lots", 1.0))
-    contract = float(params.get("contract_size", 1.0))
-    fee_per_side = float(params.get("fee_per_side", 0.0))
-    # Engine fill capacity vs the pyramid strategy's slot cap: the batch
-    # Pyramid defaults ITS cap to 3 while the engine capacity defaults to
-    # 1 (replay.py Pyramid.__init__ vs _replay_core max_positions) — with
-    # max_positions unset the batch keeps queueing capacity-dropped opens
-    # (each consuming a shared submission draw), so live must too.
-    max_positions = int(params.get("max_positions", 1))
-    strat = params.get("strategy", "sma_cross")
-    pyramid = strat == "pyramid"
-    pyr_cap = int(params.get("max_positions", 3)) if pyramid else 0
-    signal_follow = strat == "signal_follow"
-    sig_thr = float(params.get("signal_threshold", 0.0))
-    sig_max_age = (
-        int(params["signal_max_age_ms"]) if "signal_max_age_ms" in params else None
-    )
-    fast = int(params.get("fast", 5))
-    slow = int(params.get("slow", 20))
-    # close-window bound: enough history for whichever decision runs
-    win = max(slow, int(params.get("period", 14)) + 1)
-    sl_dist = float(params["sl_dist"]) if "sl_dist" in params else None
-    tp_dist = float(params["tp_dist"]) if "tp_dist" in params else None
-    # non-market entry surface (R3)
-    entry_type = params.get("entry_type", "market")
-    entry_otype = _OTYPE_CODE[entry_type]
-    entry_offset = float(params.get("entry_offset", 0.0))
-    limit_offset = float(params.get("limit_offset", 0.0))
-    price_digits = int(params["price_digits"]) if "price_digits" in params else None
-    # #318 modify/cancel lifecycle on resting entries
-    modify_after_bars = (
-        int(params["modify_after_bars"]) if "modify_after_bars" in params else None
-    )
-    modify_delta = float(params.get("modify_delta", 0.0))
-    cancel_after_bars = (
-        int(params["cancel_after_bars"]) if "cancel_after_bars" in params else None
-    )
-    modify_cancel_delay_ms = int(params.get("modify_cancel_delay_ms", 1))
-
-    def rp(x: float) -> float:
-        """Snap an order price to the symbol's digits at SUBMISSION (the
-        reference's _round_price; market fills use the raw quote)."""
-        return x if price_digits is None else round(x, price_digits)
-
-    def entry_trigger(d: int, b: float, a: float) -> tuple[float, float]:
-        """(trigger, limit) for a non-market entry queued at decision time,
-        from the decision tick's quote; (nan, nan) for market."""
-        if entry_otype == _OT_LIMIT:
-            return rp((a - entry_offset) if d > 0 else (b + entry_offset)), float("nan")
-        if entry_otype == _OT_STOP:
-            return rp((a + entry_offset) if d > 0 else (b - entry_offset)), float("nan")
-        if entry_otype == _OT_STOP_LIMIT:
-            trig = (a + entry_offset) if d > 0 else (b - entry_offset)
-            lim = (trig - limit_offset) if d > 0 else (trig + limit_offset)
-            return rp(trig), rp(lim)
-        return float("nan"), float("nan")
-
-    def run(key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        (symbol,) = key
-        if state.hasTimedOut:  # pragma: no cover - timeout_ms routes to the
-            return  # generic path; a stray firing must NOT drop live state
-        chunks = [p for p in pdfs if len(p)]
-        if not chunks:
-            return
-        pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
-        # Total event order across Arrow chunks with the BATCH CORE'S key
-        # precedence (replay.py #385 contract) so intra-millisecond ties
-        # resolve identically in both pipelines; signal rows sort FIRST at
-        # equal event time (the as-of at-or-before contract).
-        keys = [
-            c
-            for c in ("time_msc", "tick_seq", "timestamp", "collected_msc", "bid", "ask")
-            if c in pdf.columns
-        ]
-        has_sig_rows = "__is_sig" in pdf.columns
-        if has_sig_rows:
-            # 0 for signal rows, 1 for ticks: ascending sort puts the
-            # signal FIRST at equal event time (as-of at-or-before)
-            pdf = pdf.assign(__tick_after_sig=1 - pdf["__is_sig"])
-            keys.insert(1, "__tick_after_sig")
-        pdf = pdf.sort_values(keys, kind="mergesort")
-
-        if state.exists:
-            (bucket, cur_close, closes, target, open_count,
-             p_dir, p_lots, p_ems, p_ep, p_fees, p_mae, p_mfe, p_maep, p_mfep,
-             p_sms, p_sval, trade_count,
-             pend_due, pend_kind, pend_dir, pend_otype, pend_trig, pend_lim,
-             pend_sms, pend_sval,
-             r_dir, r_otype, r_trig, r_lim, r_bars, r_mod, r_opk, r_opms, r_optrig,
-             r_sms, r_sval,
-             n_draws, rng_blob, sig_ms, sig_val) = state.get
-            closes = list(closes)
-            positions = [
-                _Pos(*vals)
-                for vals in zip(p_dir, p_lots, p_ems, p_ep, p_fees, p_mae, p_mfe,
-                                p_maep, p_mfep, p_sms, p_sval)
-            ]
-            pending = [
-                list(vals)
-                for vals in zip(pend_due, pend_kind, pend_dir, pend_otype,
-                                pend_trig, pend_lim, pend_sms, pend_sval)
-            ]
-            resting = [
-                _Resting(*vals)
-                for vals in zip(r_dir, r_otype, r_trig, r_lim, r_bars, r_mod,
-                                r_opk, r_opms, r_optrig, r_sms, r_sval)
-            ]
-        else:
-            bucket, cur_close, closes, target, open_count = -1, 0.0, [], 0, 0
-            positions, pending, resting = [], [], []
-            trade_count, n_draws, rng_blob = 0, 0, None
-            sig_ms, sig_val = _NO_SIG, float("nan")
-        rng = None
-        if latency_max_ms > 0:
-            import random
-
-            rng = random.Random(latency_seed)
-            if rng_blob:
-                rng.setstate(pickle.loads(bytes(rng_blob)))
-
-        out: list[tuple] = []
-        ts_ms = pdf["time_msc"].astype("int64").tolist()
-        bl = pdf["bid"].tolist()
-        al = pdf["ask"].tolist()
-        sig_rows = pdf["__is_sig"].tolist() if has_sig_rows else None
-        score_rows = pdf["__score"].tolist() if has_sig_rows else None
-
-        def emit_close(p: _Pos, t: int, price: float, reason: str) -> None:
-            nonlocal trade_count
-            gross = p.dir * (price - p.entry_price) * contract * p.lots
-            fees = p.fees + fee_per_side * p.lots
-            has_sig = p.sig_ms != _NO_SIG
-            out.append(
-                (
-                    symbol, trade_count, "LONG" if p.dir > 0 else "SHORT", p.lots,
-                    pd.Timestamp(p.entry_ms, unit="ms"), p.entry_price,
-                    pd.Timestamp(t, unit="ms"), price,
-                    gross, fees, gross - fees,
-                    p.mae, p.mfe, p.maep, p.mfep, reason,
-                    pd.Timestamp(p.sig_ms, unit="ms") if has_sig else None,
-                    p.sig_val if has_sig else None,
-                )
-            )
-            trade_count += 1
-
-        def fill_open(d: int, olots: float, t: int, entry: float,
-                      dec_sig_ms: int, dec_sig_val: float) -> None:
-            positions.append(
-                _Pos(d, olots, t, entry, fee_per_side * olots,
-                     # a side with no excursion reports the ENTRY price as
-                     # its extreme (the batch contract)
-                     0.0, 0.0, entry, entry, dec_sig_ms, dec_sig_val)
-            )
-
-        for idx in range(len(ts_ms)):
-            t = ts_ms[idx]
-            if sig_rows is not None and sig_rows[idx]:
-                # signal row: state moves forward; no tick processing
-                sig_ms, sig_val = t, float(score_rows[idx])
-                continue
-            b = bl[idx]
-            a = al[idx]
-
-            # Phase 0 — resolve modify/cancel ops scheduled on earlier
-            # ticks (#318: applied BEFORE price triggers so the updated
-            # trigger is in effect for this tick)
-            if resting:
-                kept = []
-                for r in resting:
-                    if r.opk != _OP_NONE and t >= r.op_ms:
-                        if r.opk == _OP_CANCEL:
-                            continue  # order removed
-                        r.trig = r.op_trig
-                        r.opk = _OP_NONE
-                    kept.append(r)
-                resting = kept
-
-            bk = t // bar_ms * bar_ms
-            acts: list[tuple] = []  # (kind, dir, lots_mult) queued this tick
-            if bk != bucket:
-                if bucket != -1:
-                    # bar closes: append its close, trim, lifecycle, decide
-                    closes.append(cur_close)
-                    if len(closes) > win:
-                        del closes[0]
-                    # modify/cancel lifecycle bookkeeping: count closed bars
-                    # an entry has rested un-triggered; schedule ops at the
-                    # decision tick (they apply at Phase 0 once the delay
-                    # elapses) — same order as the batch core
-                    if resting and (
-                        modify_after_bars is not None or cancel_after_bars is not None
-                    ):
-                        for r in resting:
-                            r.bars += 1
-                            if r.opk == _OP_NONE:
-                                if (
-                                    cancel_after_bars is not None
-                                    and r.bars >= cancel_after_bars
-                                ):
-                                    r.opk = _OP_CANCEL
-                                    r.op_ms = t + modify_cancel_delay_ms
-                                elif (
-                                    modify_after_bars is not None
-                                    and not r.modified
-                                    and r.bars >= modify_after_bars
-                                ):
-                                    r.modified = 1
-                                    r.opk = _OP_MODIFY
-                                    r.op_ms = t + modify_cancel_delay_ms
-                                    r.op_trig = rp(r.trig + r.dir * modify_delta)
-                    if pyramid:
-                        # Pyramid.on_bar_actions: while SMA(fast)>SMA(slow)
-                        # add one position per closed bar up to the slot
-                        # cap; on the flip, close ALL (oldest first). The
-                        # slot count includes in-flight opens, reclaimed on
-                        # capacity drops (on_open_dropped).
-                        if len(closes) >= slow:
-                            cond = sum(closes[-fast:]) / fast > sum(closes[-slow:]) / slow
-                            if cond:
-                                if open_count < pyr_cap:
-                                    open_count += 1
-                                    acts.append((1, 1, lots))
-                            elif open_count:
-                                open_count = 0
-                                acts.append((0, 0, 0.0))
-                    else:
-                        if signal_follow:
-                            # W7: decide from the latest as-of signal,
-                            # entries blocked when stale/absent (the
-                            # reference's stale-data guard posture)
-                            fresh = sig_ms != _NO_SIG and (
-                                sig_max_age is None or t - sig_ms <= sig_max_age
-                            )
-                            if not fresh:
-                                new_target = 0
-                            elif sig_val > sig_thr:
-                                new_target = 1
-                            elif sig_val < -sig_thr:
-                                new_target = -1
-                            else:
-                                new_target = 0
-                        else:
-                            new_target = _decide(closes, target, params)
-                        if new_target != target:
-                            target = new_target
-                            # one rng draw per flip regardless of what gets
-                            # queued (the batch on_bar contract)
-                            delay = (
-                                rng.randint(latency_min_ms, latency_max_ms) if rng else 0
-                            )
-                            if rng:
-                                n_draws += 1
-                            due = t + delay
-                            # resolve-modify/cancel phase: a newer signal
-                            # cancels any resting entry before queueing its
-                            # own orders (the batch target-model contract)
-                            resting = []
-                            if positions:
-                                # close_all queued ONLY when a position
-                                # exists at SIGNAL time — the batch
-                                # contract. (An open still in flight gets
-                                # no close: it fills, the next flip's
-                                # close_all takes it out.)
-                                pending.append(
-                                    [due, 0, 0, _OT_MARKET, float("nan"),
-                                     float("nan"), _NO_SIG, float("nan")]
-                                )
-                            if target != 0:
-                                trig, lim = entry_trigger(target, b, a)
-                                pending.append(
-                                    [due, 1, target, entry_otype, trig, lim,
-                                     sig_ms if signal_follow else _NO_SIG,
-                                     sig_val if signal_follow else float("nan")]
-                                )
-                bucket = bk
-            cur_close = (b + a) / 2.0
-
-            if acts:
-                # action model: queueable actions share ONE submission draw
-                # per decision (the batch handle_actions contract); opens
-                # respect the configured entry_type (batch "open" branch)
-                delay = rng.randint(latency_min_ms, latency_max_ms) if rng else 0
-                if rng:
-                    n_draws += 1
-                due = t + delay
-                for kind, d, _l in acts:
-                    if kind == 1:
-                        trig, lim = entry_trigger(d, b, a)
-                        pending.append(
-                            [due, 1, d, entry_otype, trig, lim, _NO_SIG, float("nan")]
-                        )
-                    else:
-                        pending.append(
-                            [due, 0, 0, _OT_MARKET, float("nan"), float("nan"),
-                             _NO_SIG, float("nan")]
-                        )
-
-            # Phase 1 — drain the latency queue head-first (FIFO by
-            # submission, the batch contract) at the current quote
-            while pending and t >= pending[0][0]:
-                _, kind, d, otype, trig, lim, dsig_ms, dsig_val = pending.pop(0)
-                if kind == 0:  # close_all, oldest first
-                    for p in list(positions):
-                        emit_close(p, t, b if p.dir > 0 else a, "SIGNAL")
-                    positions = []
-                elif otype != _OT_MARKET:
-                    # limit/stop/stop_limit rest past their deadline; price
-                    # triggers are evaluated in Phases 2/3 (same tick
-                    # included) — registered regardless of book capacity
-                    resting.append(
-                        _Resting(d, otype, trig, lim, 0, 0, _OP_NONE, 0, 0.0,
-                                 dsig_ms, dsig_val)
-                    )
-                elif len(positions) >= max_positions:
-                    # capacity-dropped market open: consumed (batch
-                    # execute()); the pyramid strategy reclaims its
-                    # reserved slot (on_open_dropped)
-                    if pyramid and open_count:
-                        open_count -= 1
-                else:
-                    fill_open(d, lots, t, a if d > 0 else b, dsig_ms, dsig_val)
-
-            # Phases 2/3 — price triggers on resting entries (the batch
-            # trade_simulator contract): LONG limit fills AT the limit once
-            # ask <= limit, SHORT once bid >= limit; stops break out and
-            # fill at market; a triggered STOP_LIMIT converts to a limit
-            # order at its stored limit price and may fill the same tick.
-            # Orders triggering while the book is at capacity WAIT.
-            if resting:
-                kept = []
-                for r in resting:
-                    d = r.dir
-                    trig = r.trig
-                    fill = None
-                    if r.otype == _OT_LIMIT:
-                        if d > 0 and a <= trig:
-                            fill = trig
-                        elif d < 0 and b >= trig:
-                            fill = trig
-                    elif r.otype == _OT_STOP:
-                        if d > 0 and a >= trig:
-                            fill = a
-                        elif d < 0 and b <= trig:
-                            fill = b
-                    else:  # stop_limit: stop leg triggers -> convert to limit
-                        if (d > 0 and a >= trig) or (d < 0 and b <= trig):
-                            r.otype = _OT_LIMIT
-                            r.trig = r.lim
-                            r.opk = _OP_NONE  # conversion clears in-flight ops
-                            if d > 0 and a <= r.trig:
-                                fill = r.trig
-                            elif d < 0 and b >= r.trig:
-                                fill = r.trig
-                    if fill is None:
-                        kept.append(r)
-                    elif len(positions) >= max_positions:
-                        kept.append(r)  # wait for capacity, keep resting
-                    else:
-                        fill_open(d, lots, t, fill, r.sig_ms, r.sig_val)
-                resting = kept
-
-            # excursions AFTER fills (entry tick's spread lands in MAE),
-            # then broker-side SL/TP on the close-side mark, FILL AT THE
-            # LEVEL — the batch R3 contract, per position in book order
-            if positions:
-                for p in list(positions):
-                    mark = b if p.dir > 0 else a
-                    unreal = p.dir * (mark - p.entry_price) * contract * p.lots
-                    if unreal < p.mae:
-                        p.mae, p.maep = unreal, mark
-                    if unreal > p.mfe:
-                        p.mfe, p.mfep = unreal, mark
-                    if sl_dist is not None or tp_dist is not None:
-                        move = p.dir * (mark - p.entry_price)
-                        if sl_dist is not None and move <= -sl_dist:
-                            emit_close(p, t, p.entry_price - p.dir * sl_dist, "SL")
-                            positions.remove(p)
-                            continue
-                        if tp_dist is not None and move >= tp_dist:
-                            emit_close(p, t, p.entry_price + p.dir * tp_dist, "TP")
-                            positions.remove(p)
-
-        state.update(
-            (
-                int(bucket), float(cur_close), [float(x) for x in closes],
-                int(target), int(open_count),
-                [int(p.dir) for p in positions], [float(p.lots) for p in positions],
-                [int(p.entry_ms) for p in positions],
-                [float(p.entry_price) for p in positions],
-                [float(p.fees) for p in positions],
-                [float(p.mae) for p in positions], [float(p.mfe) for p in positions],
-                [float(p.maep) for p in positions], [float(p.mfep) for p in positions],
-                [int(p.sig_ms) for p in positions],
-                [float(p.sig_val) for p in positions],
-                int(trade_count),
-                [int(x[0]) for x in pending], [int(x[1]) for x in pending],
-                [int(x[2]) for x in pending], [int(x[3]) for x in pending],
-                [float(x[4]) for x in pending], [float(x[5]) for x in pending],
-                [int(x[6]) for x in pending], [float(x[7]) for x in pending],
-                [int(r.dir) for r in resting], [int(r.otype) for r in resting],
-                [float(r.trig) for r in resting], [float(r.lim) for r in resting],
-                [int(r.bars) for r in resting], [int(r.modified) for r in resting],
-                [int(r.opk) for r in resting], [int(r.op_ms) for r in resting],
-                [float(r.op_trig) for r in resting],
-                [int(r.sig_ms) for r in resting], [float(r.sig_val) for r in resting],
-                int(n_draws),
-                pickle.dumps(rng.getstate()) if rng is not None else None,
-                int(sig_ms), float(sig_val),
-            )
-        )
-        if timeout_ms > 0:
-            state.setTimeoutDuration(timeout_ms)
-        if out:
-            yield pd.DataFrame(out, columns=[f.name for f in TRADE_SCHEMA.fields])
-
-    src = ticks if signals is None else _merge_signals(ticks, signals)
-    return (
-        src.groupBy("symbol")
-        .applyInPandasWithState(
-            run,
-            outputStructType=TRADE_SCHEMA,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=(
-                GroupStateTimeout.ProcessingTimeTimeout
-                if timeout_ms > 0
-                else GroupStateTimeout.NoTimeout
-            ),
-        )
-    )
-
-
-# --- generic live sessions: ANY strategy, the WHOLE batch surface -----------
+# --- live sessions: ANY strategy, the WHOLE batch surface --------------------
 
 _BLOB_STATE_SCHEMA = StructType([StructField("blob", BinaryType())])
 
@@ -871,7 +199,7 @@ def bootstrap_live_sessions(
     no per-micro-batch overhead; the history's trade records themselves
     are the batch path's output (``run_backtest`` / this same drive), so
     they are drained and only counted here. Pass the result to
-    ``live_backtest_generic(bootstrap=..., bootstrap_dir=...)``."""
+    ``live_backtest(bootstrap=..., bootstrap_dir=...)``."""
     from ..operators.replay import ReplaySession
 
     p = dict(params)
@@ -1068,8 +396,8 @@ def _seed_union(
 def _trade_rows(symbol: str, trades: list) -> list[tuple]:
     """Session trade dicts -> TRADE_SCHEMA tuples. Signal-driven
     strategies carry the decision-time as-of signal on each position
-    (ReplaySession._dec_sig), so generic-path trades stamp
-    entry_sig_ts/entry_sig_score exactly like the native path."""
+    (ReplaySession._dec_sig), which lands in entry_sig_ts/entry_sig_score;
+    every other strategy leaves both null."""
     return [
         (
             symbol, tr["trade_id"], tr["direction"], tr["lots"],
@@ -1088,7 +416,7 @@ def _trade_rows(symbol: str, trades: list) -> list[tuple]:
     ]
 
 
-def live_backtest_generic(
+def live_backtest(
     ticks: DataFrame,
     params: dict,
     *,
@@ -1107,32 +435,37 @@ def live_backtest_generic(
     clipping_report_interval_s: float = 60.0,
     telemetry_dir: str | None = None,
 ) -> DataFrame:
-    """The live loop for ANY decision logic with the ENTIRE batch feature
-    surface — per-symbol state is the pickled ``operators.replay.
-    ReplaySession``, the SAME state-machine object the batch loop drives
-    tick by tick. The reference's dual-pipeline design point
-    (tick_pipeline_core shared by batch orchestrator and autotrader loop)
-    lands here literally: there is no reimplementation to drift, so ctx
-    strategies with per-tick management (trend_channel: resting entries
-    with attached SL/TP, trailing-stop ratchets, R-rung partial closes,
-    cancel/re-price lifecycle), scale_out partial-close ladders, plugins,
-    maker/taker fees, spot accounting, margin gates, swap accrual, stress
-    rejection and stale windows all run live with parity BY CONSTRUCTION.
+    """ticks(symbol, timestamp, time_msc, bid, ask[, tick_seq,
+    collected_msc]) STREAM -> trade-record stream, one row per closed
+    trade. ``params`` is the scenario's parameters map, read exactly as
+    ``run_backtest`` reads it (strategy and its knobs, bar_ms, lots,
+    fees, entry_type/offsets, modify/cancel lifecycle, SL/TP, ...).
+
+    Per-symbol state is the pickled ``operators.replay.ReplaySession``,
+    the same state-machine object the batch loop drives tick by tick, so
+    every strategy (target- and action-model, ctx strategies with
+    per-tick management, scale_out ladders, entry-point plugins whose
+    modules are importable on executors) and the whole order surface
+    (resting limit/stop/stop_limit entries, #318 modify/cancel, broker
+    SL/TP, maker/taker fees, spot accounting, margin gates, swap accrual,
+    stress rejection, stale windows) run live with batch parity by
+    construction. The pickle is the checkpoint form of the reference's
+    one in-memory live session. ``equity_sample_every`` is forced to 0 —
+    a live session emits trades, and an unbounded sample buffer must not
+    grow in state. A live session never END-closes (finish() is batch
+    only); swap, if configured, joins net_pnl exactly as batch.
+
+    Seeded latency (R2): with ``latency_max_ms > 0`` the session draws
+    each decision's delay from random.Random(latency_seed) — the batch
+    core's exact call sequence. The generator rides inside the pickled
+    session (its Mersenne state pickles at a fixed size), so restoring
+    it per micro-batch is O(1) in the session's lifetime draw count.
 
     ``signals``: optional (symbol, sig_ts, score) stream unioned into the
-    keyed session exactly as in ``live_backtest`` — signal rows advance
-    the session's as-of state (``ReplaySession.process_signal``) for any
-    ``on_bar_sig`` strategy (SignalFollow or a plugin), batch-identically.
-
-    Trade-off vs ``live_backtest``: state is an opaque pickle (the
-    reference's live session is one in-memory object too; this is its
-    checkpoint form) instead of typed columns, and the rng state rides
-    inside the session (random.Random pickles its Mersenne state O(1)).
-    Ticks follow the same wire contract (time_msc = epoch-ms clock,
-    optional tick_seq/collected_msc); ``equity_sample_every`` is forced to
-    0 — a live session emits trades, and an unbounded sample buffer must
-    not grow in state. A live session never END-closes (finish() is batch
-    only); swap, if configured, joins net_pnl exactly as batch.
+    keyed session (see the module docstring for the merge/arrival
+    contract) — signal rows advance the session's as-of state
+    (``ReplaySession.process_signal``) for any ``on_bar_sig`` strategy
+    (SignalFollow or a plugin), batch-identically.
 
     ``timeout_ms > 0`` arms a ProcessingTimeTimeout ghost pass (R8): when
     the feed goes quiet for ``timeout_ms``, the session heartbeats (see
@@ -1294,7 +627,7 @@ def live_backtest_generic(
             weekend_aware=weekend_aware,
             restore_now=restore_now,
             on_stale=on_stale,
-            name="live_backtest_generic.bootstrap",
+            name="live_backtest.bootstrap",
         )
         src = _seed_union(
             src, bootstrap, bootstrap_dir, key_src="symbol", key_dst="symbol"
@@ -1313,9 +646,6 @@ def live_backtest_generic(
 
 
 # --- account-global live portfolio state ------------------------------------
-
-_ACCT_STATE_SCHEMA = StructType([StructField("blob", BinaryType())])
-
 
 def live_backtest_account(
     ticks: DataFrame,
@@ -1395,7 +725,7 @@ def live_backtest_account(
     ``bootstrap``/``bootstrap_dir``: cold-start recovery from a
     ``bootstrap_account_sessions`` snapshot — blob is the pickled
     ``(AccountState, {symbol: ReplaySession})`` tuple, seeded per account
-    exactly as in ``live_backtest_generic`` (seed rows sort first;
+    exactly as in ``live_backtest`` (seed rows sort first;
     checkpoint state outranks the ledger; staleness gated the same way).
     The snapshot's ``account`` column must match the live stream's
     ``account_col`` values ("ACCOUNT" for the single-account form, which
@@ -1405,7 +735,7 @@ def live_backtest_account(
     ``ClippingMonitor`` per account (the reference's monitor is per tick
     LOOP, and the account's interleaved feed is one loop), shared by every
     sub-book (pickle's memo keeps the sharing inside the state blob);
-    semantics as in ``live_backtest_generic``.
+    semantics as in ``live_backtest``.
     """
     from ..operators.replay import AccountState, ReplaySession
 
@@ -1576,7 +906,7 @@ def live_backtest_account(
     return src.groupBy("__account").applyInPandasWithState(
         run,
         outputStructType=TRADE_SCHEMA,
-        stateStructType=_ACCT_STATE_SCHEMA,
+        stateStructType=_BLOB_STATE_SCHEMA,
         outputMode="append",
         timeoutConf=(
             GroupStateTimeout.ProcessingTimeTimeout

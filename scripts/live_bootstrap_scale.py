@@ -7,7 +7,7 @@ one-row-per-key?
 Drives `bootstrap_live_sessions` over the /tmp synth events replayed as
 ticks with SALTED symbols (event_type x event_id%%K -> 50 keys at sf1,
 500 at sf10 — the "100x symbols" axis vs the 5-symbol gate), then a
-seeded-tail `live_backtest_generic` restart over the last slice of the
+seeded-tail `live_backtest` restart over the last slice of the
 feed. Record results in SCALE.md §7. Run on an idle box, one at a time.
 """
 
@@ -45,7 +45,7 @@ def ticks_of(spark, sf_dir: str, n_salt: int):
 def measure(spark, sf_dir: str, n_salt: int, runs: int = 3) -> dict:
     from finiextestingide_spark.streaming.live_replay import (
         bootstrap_live_sessions,
-        live_backtest_generic,
+        live_backtest,
     )
 
     ticks = ticks_of(spark, sf_dir, n_salt)
@@ -73,7 +73,7 @@ def measure(spark, sf_dir: str, n_salt: int, runs: int = 3) -> dict:
     tail_schema = spark.read.parquet(tail_dir).schema
     t0 = time.perf_counter()
     stream = spark.readStream.schema(tail_schema).parquet(tail_dir)
-    out = live_backtest_generic(
+    out = live_backtest(
         stream,
         PARAMS,
         bootstrap=snap,

@@ -150,14 +150,14 @@ def test_decode_bus_signals(spark):
 
 def test_bus_stream_drives_live_session_with_batch_parity(spark, tmp_path):
     """The production composition end to end: kafka-wire rows ->
-    decode_bus_ticks -> live_backtest_generic equals the BATCH replay of
+    decode_bus_ticks -> live_backtest equals the BATCH replay of
     the same ticks trade-for-trade (seeded latency included) — a real
     readStream.format('kafka') feed drives the trading session with
     parity by construction."""
     from tests.test_live_bootstrap import LAT, PARAMS, TICK_DDL, _ticks
     from tests.test_live_socket import _assert_trade_parity
     from finiextestingide_spark.operators.replay import run_backtest, trades_table
-    from finiextestingide_spark.streaming.live_replay import live_backtest_generic
+    from finiextestingide_spark.streaming.live_replay import live_backtest
 
     feed = _ticks("EURUSD", 160)
     ticks = spark.createDataFrame(feed, TICK_DDL)
@@ -167,7 +167,7 @@ def test_bus_stream_drives_live_session_with_batch_parity(spark, tmp_path):
     ).write.parquet(bus_dir)
 
     wire = spark.readStream.schema(KAFKA_WIRE_DDL).parquet(bus_dir)
-    out = live_backtest_generic(decode_bus_ticks(wire), PARAMS, **LAT)
+    out = live_backtest(decode_bus_ticks(wire), PARAMS, **LAT)
     sink = str(tmp_path / "o")
     q = (
         out.writeStream.format("parquet")

@@ -213,7 +213,7 @@ def test_live_clipping_does_not_perturb_trades(spark, tmp_path):
     """clipping=True is pure telemetry: the trade stream is bit-identical
     with and without it."""
     from tests.test_live_bootstrap import PARAMS, LAT, TICK_DDL, _ticks
-    from finiextestingide_spark.streaming.live_replay import live_backtest_generic
+    from finiextestingide_spark.streaming.live_replay import live_backtest
 
     feed = _ticks("EURUSD", 120)
 
@@ -223,7 +223,7 @@ def test_live_clipping_does_not_perturb_trades(spark, tmp_path):
         spark.createDataFrame(feed, TICK_DDL).write.parquet(ticks_dir)
         stream = spark.readStream.schema(TICK_DDL).parquet(ticks_dir)
         q = (
-            live_backtest_generic(stream, PARAMS, **LAT, **kw)
+            live_backtest(stream, PARAMS, **LAT, **kw)
             .writeStream.format("parquet")
             .option("path", out)
             .option("checkpointLocation", str(tmp_path / f"c_{tag}"))
@@ -378,7 +378,7 @@ def test_live_telemetry_dir_writes_queryable_rows(spark, tmp_path):
     every processed tick."""
     from tests.test_live_bootstrap import PARAMS, LAT, TICK_DDL, _ticks
     from finiextestingide_spark.operators.clipping import read_clipping_telemetry
-    from finiextestingide_spark.streaming.live_replay import live_backtest_generic
+    from finiextestingide_spark.streaming.live_replay import live_backtest
 
     feed = _ticks("EURUSD", 120)
     ticks_dir = str(tmp_path / "t")
@@ -387,7 +387,7 @@ def test_live_telemetry_dir_writes_queryable_rows(spark, tmp_path):
     spark.createDataFrame(feed, TICK_DDL).write.parquet(ticks_dir)
     stream = spark.readStream.schema(TICK_DDL).parquet(ticks_dir)
     q = (
-        live_backtest_generic(
+        live_backtest(
             stream, PARAMS, **LAT,
             clipping=True, clipping_report_interval_s=0.0,
             telemetry_dir=tdir,
@@ -413,7 +413,7 @@ def test_live_telemetry_fires_across_micro_batches(spark, tmp_path):
     null-anchor-on-every-pickle behavior only batch 1 could ever report."""
     from tests.test_live_bootstrap import PARAMS, LAT, TICK_DDL, _ticks
     from finiextestingide_spark.operators.clipping import read_clipping_telemetry
-    from finiextestingide_spark.streaming.live_replay import live_backtest_generic
+    from finiextestingide_spark.streaming.live_replay import live_backtest
 
     feed = _ticks("EURUSD", 150)
     ticks_dir = str(tmp_path / "t")
@@ -428,7 +428,7 @@ def test_live_telemetry_fires_across_micro_batches(spark, tmp_path):
         .parquet(ticks_dir)
     )
     q = (
-        live_backtest_generic(
+        live_backtest(
             stream, PARAMS, **LAT,
             clipping=True, clipping_report_interval_s=0.0,
             telemetry_dir=tdir,

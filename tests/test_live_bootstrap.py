@@ -23,8 +23,8 @@ from finiextestingide_spark.streaming.live_replay import (
     _trade_rows,
     bootstrap_account_sessions,
     bootstrap_live_sessions,
+    live_backtest,
     live_backtest_account,
-    live_backtest_generic,
 )
 
 TICK_DDL = "symbol string, timestamp timestamp, time_msc long, bid double, ask double"
@@ -146,7 +146,7 @@ def test_generic_restart_without_checkpoint_parity(spark, tmp_path):
 
     def run_once():
         stream = spark.readStream.schema(TICK_DDL).parquet(ticks_dir)
-        res = live_backtest_generic(
+        res = live_backtest(
             stream, PARAMS, **LAT, bootstrap=snap, bootstrap_dir=ledger
         )
         q = (
@@ -302,7 +302,7 @@ def test_signal_follow_bootstrap_parity(spark, tmp_path):
     t_dir, s_dir = str(tmp_path / "t"), str(tmp_path / "s")
     spark.createDataFrame(tail_t, TICK_DDL).write.parquet(t_dir)
     spark.createDataFrame(tail_s, SIG_DDL).write.parquet(s_dir)
-    res = live_backtest_generic(
+    res = live_backtest(
         spark.readStream.schema(TICK_DDL).parquet(t_dir),
         params, **LAT,
         signals=spark.readStream.schema(SIG_DDL).parquet(s_dir),
@@ -335,13 +335,13 @@ def test_bootstrap_staleness_gate(spark, tmp_path):
     stream = spark.readStream.schema(TICK_DDL).parquet(ticks_dir)
     late = pd.Timestamp(T0, unit="ms") + pd.Timedelta(days=30)
     with pytest.raises(ValueError, match="trading day"):
-        live_backtest_generic(
+        live_backtest(
             stream, PARAMS, **LAT,
             bootstrap=snap, bootstrap_dir=str(tmp_path / "l1"),
             max_age_trading_days=2, restore_now=late, on_stale="error",
         )
     with pytest.warns(UserWarning, match="trading day"):
-        live_backtest_generic(
+        live_backtest(
             stream, PARAMS, **LAT,
             bootstrap=snap, bootstrap_dir=str(tmp_path / "l2"),
             max_age_trading_days=2, restore_now=late, on_stale="warn",

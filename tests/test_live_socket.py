@@ -468,7 +468,7 @@ def test_live_trade_records_parity(spark, sf_dir):
 
 def test_live_rsi_reversion_parity(spark, sf_dir):
     """Same dual-pipeline parity for rsi_reversion: its hold-previous
-    target and delta window both live in the state tuple, so the live
+    target and delta window both live in the pickled session, so the live
     session must reproduce the batch trade records exactly."""
     import pyspark.sql.functions as F
 
@@ -887,7 +887,7 @@ def test_live_pyramid_multiposition_parity(spark, sf_dir):
     one position per favorable closed bar up to max_positions and closes
     ALL (oldest first) on the flip. Slot accounting (including the
     capacity-drop reclaim the batch delivers via on_open_dropped) rides in
-    the state tuple. Trade records from the socket-replayed feed must
+    the pickled session. Trade records from the socket-replayed feed must
     equal the batch replay's field-for-field."""
     import pyspark.sql.functions as F
 
@@ -1088,7 +1088,7 @@ def _assert_trade_parity(batch, got):
 def test_live_limit_entry_parity(spark, sf_dir):
     """Resting LIMIT entries in the live session (round-7 order surface):
     every sma_cross flip queues a close plus a limit entry at
-    decision-tick ask/bid -/+ offset; the entry RESTS in the state tuple
+    decision-tick ask/bid -/+ offset; the entry RESTS in the session state
     across micro-batches, fills AT the limit on the price trigger, and the
     next flip cancels any still-resting entry before queueing its own
     (the batch target-model contract). Trade records from the socket feed
@@ -1579,60 +1579,12 @@ def test_live_signal_follow_asof_parity(spark, tmp_path):
         assert joined[r["entry_ts"]] == (r["entry_sig_ts"], r["entry_sig_score"])
 
 
-def _drive_generic_socket(spark, events, params, *, seed=42, lat_min=0, lat_max=0,
-                          n_expected=0, chunk_lines=250, chunk_pause=0.3):
-    """Feed recorded events over a socket through live_backtest_generic
-    (the pickled-ReplaySession live path) and collect trades by symbol."""
-    from finiextestingide_spark.streaming.live_replay import live_backtest_generic
-
-    lines = [
-        tick_line(r["event_type"], _epoch_us(r["ts"]), r["value"], 1.0, r["event_id"])
-        for r in events
-    ]
-    name = f"live_gen_{uuid.uuid4().hex[:8]}"
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        with TickFeedServer(lines, chunk_lines=chunk_lines,
-                            chunk_pause_secs=chunk_pause) as srv:
-            raw = read_socket_ticks(spark, "127.0.0.1", srv.port)
-            live_ticks = raw.select(
-                "symbol",
-                F.col("ts").alias("timestamp"),
-                F.unix_millis(F.col("ts")).alias("time_msc"),
-                F.col("seq").alias("tick_seq"),
-                (F.col("mid") - 0.005).alias("bid"),
-                (F.col("mid") + 0.005).alias("ask"),
-            )
-            q = (
-                live_backtest_generic(live_ticks, params, latency_seed=seed,
-                                      latency_min_ms=lat_min, latency_max_ms=lat_max)
-                .writeStream.format("memory")
-                .queryName(name)
-                .outputMode("append")
-                .start()
-            )
-            try:
-                _drain(spark, name, n_expected, q)
-                got = {}
-                for r in sorted(
-                    spark.table(name).collect(), key=lambda r: (r["symbol"], r["trade_id"])
-                ):
-                    got.setdefault(r["symbol"], []).append(r)
-            finally:
-                q.stop()
-                q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    return got
-
-
 def test_live_generic_trendchannel_parity(spark, sf_dir):
     """The production-complexity decision logic LIVE (round-7 breadth
     closure): trend_channel with per-tick management — resting entries
     with order-attached SL/TP, always-on trailing-stop ratchet, R-rung
     partial closes, cancel-on-gate-flip, re-price-on-band-drift — runs in
-    live_backtest_generic, whose per-symbol state is the pickled
+    live_backtest, whose per-symbol state is the pickled
     ReplaySession the batch loop drives. Same seeded 50-2000ms latency,
     same feed over a real socket: trade records (including PARTIAL rungs)
     must equal the batch replay's field-for-field. There is no
@@ -1664,7 +1616,7 @@ def test_live_generic_trendchannel_parity(spark, sf_dir):
     # the fixture must exercise the partial-close rung somewhere
     assert any(r["lots"] < 1.0 for v in batch.values() for r in v)
 
-    got = _drive_generic_socket(
+    got = _drive_live_socket(
         spark, events, params, seed=seed, lat_min=lat_min, lat_max=lat_max,
         n_expected=n_expected,
     )
@@ -1674,13 +1626,13 @@ def test_live_generic_trendchannel_parity(spark, sf_dir):
 @pytest.mark.slow  # heavyweight parity/convergence drive; the rest of
 # this file keeps the surface's default coverage (VERDICT r15 #2 window)
 def test_live_generic_scaleout_and_breakout_parity(spark, sf_dir, tmp_path):
-    """Two more decision surfaces through the generic live session, driven
+    """Two more decision surfaces through the live session, driven
     from a chunked file stream (one micro-batch per file): the scale_out
     partial-close ladder (close_oldest with a fraction -> PARTIAL trade
     records) and trend_channel's stop_breakout entry mode (resting STOP
     entries, breakout fills at market). Both must equal the batch replay
     field-for-field."""
-    from finiextestingide_spark.streaming.live_replay import live_backtest_generic
+    from finiextestingide_spark.streaming.live_replay import live_backtest
 
     events = (
         load_table(spark, sf_dir, "events")
@@ -1731,7 +1683,7 @@ def test_live_generic_scaleout_and_breakout_parity(spark, sf_dir, tmp_path):
             )
             name = f"live_gen2_{uuid.uuid4().hex[:8]}"
             q = (
-                live_backtest_generic(stream, params)
+                live_backtest(stream, params)
                 .writeStream.format("memory")
                 .queryName(name)
                 .outputMode("append")
@@ -1824,12 +1776,12 @@ def test_live_account_full_surface_parity(spark, sf_dir, tmp_path):
 
 
 def test_live_generic_restart_recovery(spark, sf_dir, tmp_path):
-    """Production decision logic survives a crash: live_backtest_generic's
+    """Production decision logic survives a crash: live_backtest's
     pickled ReplaySession (trend_channel with per-tick management and
     seeded latency) round-trips through a REAL checkpoint — a query killed
     mid-feed and restarted must finish with exactly the batch trade
     records, including rungs whose entry predates the crash."""
-    from finiextestingide_spark.streaming.live_replay import live_backtest_generic
+    from finiextestingide_spark.streaming.live_replay import live_backtest
 
     params = {
         "strategy": "trend_channel", "entry_mode": "limit_pullback",
@@ -1873,8 +1825,8 @@ def test_live_generic_restart_recovery(spark, sf_dir, tmp_path):
             .parquet(str(src / "p*"))
         )
         return (
-            live_backtest_generic(stream, params, latency_seed=seed,
-                                  latency_min_ms=lat_min, latency_max_ms=lat_max)
+            live_backtest(stream, params, latency_seed=seed,
+                          latency_min_ms=lat_min, latency_max_ms=lat_max)
             .writeStream.format("parquet")
             .option("path", out_dir)
             .option("checkpointLocation", ckpt)
@@ -1905,11 +1857,11 @@ def test_live_generic_restart_recovery(spark, sf_dir, tmp_path):
 @pytest.mark.slow  # heavyweight parity/convergence drive; the rest of
 # this file keeps the surface's default coverage (VERDICT r15 #2 window)
 def test_live_dispatch_runs_whole_strategy_surface(spark, sf_dir, tmp_path):
-    """ONE live entry point for every strategy: live_backtest delegates
-    non-native strategies to the generic session path, so macd_cross
-    (recursive EMA state — exactly the kind of cross-bar state the
-    explicit tuple does not carry) and consensus run live through the
-    same call the target-model strategies use, with full batch parity."""
+    """ONE live entry point for every strategy: macd_cross (recursive EMA
+    state carried across bars) and consensus run live through the same
+    ``live_backtest`` call the target-model strategies use — the pickled
+    session holds whatever cross-bar state a strategy keeps — with full
+    batch parity."""
     from finiextestingide_spark.streaming.live_replay import live_backtest
 
     events = (
@@ -1957,7 +1909,7 @@ def test_live_dispatch_runs_whole_strategy_surface(spark, sf_dir, tmp_path):
             )
             name = f"live_disp_{uuid.uuid4().hex[:8]}"
             q = (
-                live_backtest(stream, params)  # note: NOT the generic entry
+                live_backtest(stream, params)
                 .writeStream.format("memory")
                 .queryName(name)
                 .outputMode("append")
@@ -1980,14 +1932,11 @@ def test_signal_follow_batch_live_duality(spark, sf_dir, tmp_path):
     backtests through each scenario's signal-data slice AND to the live
     loop from the same queue): run_backtest(signals=...) merges typed
     signal rows into the replay and SignalFollow decides from the
-    session's as-of state — and BOTH live paths (the native
-    transparent-state operator and the pickled-ReplaySession generic one)
-    must produce the identical non-END trade records on the same feed."""
+    session's as-of state — and the live operator must produce the
+    identical non-END trade records on the same feed, each stamped with
+    the signal that drove its entry decision."""
     from finiextestingide_spark.operators.replay import run_backtest, trades_table
-    from finiextestingide_spark.streaming.live_replay import (
-        live_backtest,
-        live_backtest_generic,
-    )
+    from finiextestingide_spark.streaming.live_replay import live_backtest
 
     params = {
         "strategy": "signal_follow", "bar_ms": "3600000",
@@ -2050,12 +1999,14 @@ def test_signal_follow_batch_live_duality(spark, sf_dir, tmp_path):
     tick_schema = spark.createDataFrame([], tick_ddl).schema
     sig_schema = spark.createDataFrame([], sig_ddl).schema
 
-    def drive(op):
+    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    try:
         st = spark.readStream.schema(tick_schema).parquet(str(src_t / "p*"))
         ss = spark.readStream.schema(sig_schema).parquet(str(src_s / "p*"))
         name = f"sig_dual_{uuid.uuid4().hex[:8]}"
         q = (
-            op(st, params, signals=ss)
+            live_backtest(st, params, signals=ss)
             .writeStream.format("memory")
             .queryName(name)
             .outputMode("append")
@@ -2068,27 +2019,19 @@ def test_signal_follow_batch_live_duality(spark, sf_dir, tmp_path):
             spark.table(name).collect(), key=lambda r: (r["symbol"], r["trade_id"])
         ):
             got.setdefault(r["symbol"], []).append(r)
-        return got
-
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        got_native = drive(live_backtest)
-        got_generic = drive(live_backtest_generic)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old_parts)
 
-    _assert_trade_parity(batch, got_native)
-    _assert_trade_parity(batch, got_generic)
-    # BOTH paths stamp the driving decision-time signal, identically
-    # (round-8 item 7 closed the generic-path observability asymmetry)
-    assert any(
-        r["entry_sig_ts"] is not None for v in got_native.values() for r in v
-    )
-    for s in got_native:
-        for nr, gr in zip(got_native[s], got_generic[s]):
-            assert gr["entry_sig_ts"] == nr["entry_sig_ts"], (s, nr["trade_id"])
-            assert gr["entry_sig_score"] == nr["entry_sig_score"], (s, nr["trade_id"])
+    _assert_trade_parity(batch, got)
+    # every live trade stamps the decision-time signal that drove its
+    # entry: a real signal row of its symbol, at or before the fill
+    sig_at = {(s, _epoch_us(ts) // 1000, sc) for s, ts, sc in sig_rows}
+    for s, trades in got.items():
+        for r in trades:
+            assert r["entry_sig_ts"] is not None, (s, r["trade_id"])
+            sig_ms = _epoch_us(r["entry_sig_ts"]) // 1000
+            assert (s, sig_ms, r["entry_sig_score"]) in sig_at, (s, r["trade_id"])
+            assert sig_ms <= _epoch_us(r["entry_ts"]) // 1000, (s, r["trade_id"])
 
 
 def test_signal_follow_latency_parity(spark, sf_dir, tmp_path):
@@ -2187,12 +2130,12 @@ def test_signal_follow_latency_parity(spark, sf_dir, tmp_path):
 def test_generic_live_signals_with_collected_msc(spark, sf_dir, tmp_path):
     """Regression (round-8 advice): ``_merge_signals`` left collected_msc
     NULL on signal rows when the tick stream carried the column, so the
-    generic session path's int64 cast raised IntCastingNaNError on the
+    session drive's int64 cast raised IntCastingNaNError on the
     documented optional-collected_msc wire contract. Signal rows now
     stamp collected_msc from sig_ts (mirroring batch merge_signal_rows)
-    and the generic live run must match the batch trades exactly."""
+    and the live run must match the batch trades exactly."""
     from finiextestingide_spark.operators.replay import run_backtest, trades_table
-    from finiextestingide_spark.streaming.live_replay import live_backtest_generic
+    from finiextestingide_spark.streaming.live_replay import live_backtest
 
     params = {
         "strategy": "signal_follow", "bar_ms": "3600000",
@@ -2248,7 +2191,7 @@ def test_generic_live_signals_with_collected_msc(spark, sf_dir, tmp_path):
         ss = spark.readStream.schema(sig_schema).parquet(str(src_s / "p*"))
         name = f"sig_cmsc_{uuid.uuid4().hex[:8]}"
         q = (
-            live_backtest_generic(st, params, signals=ss)
+            live_backtest(st, params, signals=ss)
             .writeStream.format("memory")
             .queryName(name)
             .outputMode("append")
@@ -2266,29 +2209,18 @@ def test_generic_live_signals_with_collected_msc(spark, sf_dir, tmp_path):
     _assert_trade_parity(batch, got)
 
 
-@pytest.mark.parametrize("entry_op", ["generic", "native_entry"])
-def test_live_generic_heartbeat_timeout_idle_feed(spark, entry_op):
+def test_live_generic_heartbeat_timeout_idle_feed(spark):
     """R8 live closure (round-8 item 1): with ``timeout_ms`` armed, the
-    generic session path runs ghost passes via ProcessingTimeTimeout — an
-    IDLE feed (only keepalives on the wire, no Z ticks) still resolves
-    the latency fills whose deadline fell into the gap, emitting the
-    close trade in REAL time. The reference's inter-tick heartbeat
-    (process_tick_loop.py:52-107) for the path that runs the whole
-    strategy surface. The emitted trade must be field-identical to the
-    batch replay's in-gap resolution (heartbeat_ms) on the same ticks
-    plus a post-gap tick: ghost passes change WHEN the trade appears,
-    never its content. Parametrized over the direct generic call AND the
-    ``live_backtest`` entry point — timeout_ms>0 routes every strategy
-    (native set included) through the session path, because the native
-    branch's typed state carries no gap anchor and its historical
-    expire-on-idle behavior would have dropped open positions."""
+    live session runs ghost passes via ProcessingTimeTimeout — an IDLE
+    feed (only keepalives on the wire, no Z ticks) still resolves the
+    latency fills whose deadline fell into the gap, emitting the close
+    trade in REAL time. The reference's inter-tick heartbeat
+    (process_tick_loop.py:52-107). The emitted trade must be
+    field-identical to the batch replay's in-gap resolution
+    (heartbeat_ms) on the same ticks plus a post-gap tick: ghost passes
+    change WHEN the trade appears, never its content."""
     from finiextestingide_spark.operators.replay import ReplaySession
-    from finiextestingide_spark.streaming.live_replay import (
-        live_backtest,
-        live_backtest_generic,
-    )
-
-    op = live_backtest_generic if entry_op == "generic" else live_backtest
+    from finiextestingide_spark.streaming.live_replay import live_backtest
 
     t0_ms = 1_767_225_600_000
     prices = [10.0, 11.0, 12.0, 13.0, 14.0, 15.0, 14.0, 13.0, 1.0]
@@ -2340,10 +2272,9 @@ def test_live_generic_heartbeat_timeout_idle_feed(spark, entry_op):
                 (F.col("mid") + 0.005).alias("ask"),
             )
             q = (
-                op(live_ticks, params, latency_seed=seed,
-                   latency_min_ms=lat_min,
-                   latency_max_ms=lat_max,
-                   timeout_ms=500)
+                live_backtest(live_ticks, params, latency_seed=seed,
+                              latency_min_ms=lat_min, latency_max_ms=lat_max,
+                              timeout_ms=500)
                 .writeStream.format("memory")
                 .queryName(name)
                 .outputMode("append")
@@ -2483,7 +2414,7 @@ def test_live_account_heartbeat_timeout_idle_feed(spark):
     account (the keepalive market feed) heartbeats lagging sub-books
     toward the latest event time (cross-symbol clock propagation); and
     with ``timeout_ms`` armed, a FULLY idle account runs the
-    ProcessingTimeTimeout ghost pass. Same fixture as the generic-path
+    ProcessingTimeTimeout ghost pass. Same fixture as the per-symbol
     test, driven through live_backtest_account."""
     from finiextestingide_spark.operators.replay import ReplaySession
     from finiextestingide_spark.streaming.live_replay import live_backtest_account

@@ -2363,7 +2363,7 @@ def run_backtest(
     """ticks(symbol,timestamp,time_msc[,collected_msc],bid,ask) x scenarios
     (SCENARIO_SCHEMA) -> one result row per scenario (REPLAY_RESULT_SCHEMA).
 
-    Two scale decisions here:
+    Three scale decisions here:
     - Scenario CONFIG travels in a driver-side closure keyed by scenario_id,
       not as columns joined onto every tick: the pre-replay shuffle carries
       only (scenario_id, ts, time_msc, collected_msc, bid, ask), never the
@@ -2374,7 +2374,36 @@ def run_backtest(
       onto fewer cores. An explicit repartition(n, col) is exempt from AQE
       coalescing. The scenario table is driver metadata (same as the
       reference's scenario list) and the collect is SIZE-GUARDED — a sweep
-      beyond ``max_driver_scenarios`` fails loudly instead of OOMing."""
+      beyond ``max_driver_scenarios`` fails loudly instead of OOMing.
+    - The result is materialized ONCE: the frame is marked
+      ``localCheckpoint(eager=False)``, so the first action runs the replay
+      state machine and every later action (a ledger write, then the range
+      sample and the sort of a ranking, then a count) reads the stored rows
+      instead of re-running the Python stage. Storage footprint: one row
+      per scenario, with its trades and equity-sample arrays, held in
+      executor block storage at MEMORY_AND_DISK and freed by the
+      ContextCleaner once the frame is dropped (no ``unpersist`` owner
+      needed, unlike ``persist``). Lineage trade-off: the checkpoint
+      truncates lineage, so losing an executor that holds result blocks
+      fails the action instead of recomputing the replay. Under AQE,
+      marking the checkpoint runs the pre-replay shuffle at call time; the
+      replay itself still waits for the first action."""
+    return _replay_plan(
+        ticks, scenarios, signals=signals, max_driver_scenarios=max_driver_scenarios
+    ).localCheckpoint(eager=False)
+
+
+def _replay_plan(
+    ticks: DataFrame,
+    scenarios: DataFrame,
+    *,
+    signals: DataFrame | None = None,
+    max_driver_scenarios: int = MAX_DRIVER_SCENARIOS,
+) -> DataFrame:
+    """The lazy replay frame behind ``run_backtest``: scenario attach, one
+    ``repartition(n, __part)`` and the grouped ``applyInPandas``. Every
+    action on it re-runs the replay; its executed plan is the one the
+    plan-shape tests pin."""
     scen_rows = _bounded_collect(scenarios, max_driver_scenarios, "run_backtest(scenarios)")
     cfg = {r["scenario_id"]: r.asDict(recursive=True) for r in scen_rows}
     n = max(len(scen_rows), 1)

@@ -9,13 +9,18 @@ Usage: python scripts/check_gate.py [--sf DIR] [query ...]
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 import time
 import traceback
 
 import duckdb
 
-sys.path.insert(0, ".")
+# The repo root, resolved from this file so the script runs from any working
+# directory: this process imports the package from it, and the vanilla session
+# ships it to the Python workers.
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import SparkSession  # noqa: E402
 
@@ -27,13 +32,16 @@ from finiextestingide_spark.testing import compare_frames  # noqa: E402
 def vanilla_session() -> SparkSession:
     """A session like the DRIVER's — deliberately NOT build_session, so the
     gate mirror catches any query that silently depends on our own session
-    flags (round-1 lesson: 21 queries failed only under the harness session)."""
+    flags (round-1 lesson: 21 queries failed only under the harness session).
+    The one addition is the package location for the Python workers, so the
+    mirror runs from any working directory."""
     return (
         SparkSession.builder.appName("check-gate")
         .master("local[32]")
         .config("spark.sql.shuffle.partitions", "32")
         .config("spark.driver.memory", "8g")
         .config("spark.ui.enabled", "false")
+        .config("spark.executorEnv.PYTHONPATH", REPO)
         .getOrCreate()
     )
 

@@ -47,10 +47,12 @@ def test_bucketed_tick_lake_backtest_single_exchange(spark, sf_dir):
     100 TB tick scan is never moved; only the (already-sliced) per-scenario
     rows travel once. The plan is pinned structurally: exactly one
     Exchange node, and it is the scenario repartition; the scan is the
-    bucketed table."""
+    bucketed table. The pin reads ``_replay_plan``, the lazy frame that
+    run_backtest checkpoints (the checkpointed result's own plan is a scan
+    of the stored rows)."""
     import pyspark.sql.functions as F
 
-    from finiextestingide_spark.operators.replay import run_backtest
+    from finiextestingide_spark.operators.replay import _replay_plan
     from finiextestingide_spark.sources.lake import write_bucketed
     from finiextestingide_spark.sources.tables import load_table
 
@@ -75,7 +77,7 @@ def test_bucketed_tick_lake_backtest_single_exchange(spark, sf_dir):
             "tick_processing_budget_ms double, latency_seed int, "
             "latency_min_ms int, latency_max_ms int, parameters map<string,string>",
         )
-        res = run_backtest(lake_ticks, scenarios)
+        res = _replay_plan(lake_ticks, scenarios)
         plan = _plan(res)
         # exactly ONE shuffle Exchange in the whole plan, and it is the
         # explicit scenario repartition (hashpartitioning on __part, the

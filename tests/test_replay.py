@@ -1755,12 +1755,15 @@ def test_murmur_salt_exact_partition_placement(spark):
     (a) _murmur3_hash_int is bit-identical to Spark's F.hash on ints,
     (b) _part_salts yields one distinct partition per scenario,
     (c) the physical plan still carries exactly ONE Exchange (the salt
-        grouping reuses the explicit repartition — no second shuffle)."""
+        grouping reuses the explicit repartition — no second shuffle). The
+        plan is read from ``_replay_plan``, the lazy frame run_backtest
+        checkpoints."""
     import pyspark.sql.functions as F
 
     from finiextestingide_spark.operators.replay import (
         _murmur3_hash_int,
         _part_salts,
+        _replay_plan,
     )
 
     vals = [0, 1, 7, 40, 12345, 2**31 - 1, -1, -40, 999_983]
@@ -1779,7 +1782,7 @@ def test_murmur_salt_exact_partition_placement(spark):
         spark,
         [(i, f"s{i}", "X", None, None, 1, 0, 0, BASE) for i in range(1, 9)],
     )
-    plan = run_backtest(ticks, scenarios)._jdf.queryExecution().executedPlan().toString()
+    plan = _replay_plan(ticks, scenarios)._jdf.queryExecution().executedPlan().toString()
     n_exchanges = plan.count("Exchange hashpartitioning")
     assert n_exchanges == 1, plan
 

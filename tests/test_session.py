@@ -1,10 +1,13 @@
-"""Session factory contracts that only show outside the test process."""
+"""Session factory and entry-point contracts that only show outside the test
+process."""
 
 from __future__ import annotations
 
 import os
 import subprocess
 import sys
+
+import pytest
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -41,3 +44,23 @@ def test_python_workers_import_package_from_any_cwd(tmp_path):
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
     assert "ROWS 5 finiextestingide_spark" in proc.stdout
+
+
+def test_check_gate_runs_from_any_cwd(tmp_path, sf_dir):
+    """scripts/check_gate.py started outside the repo, with PYTHONPATH unset:
+    the driver imports the package and the replay gate's Python workers find
+    it too, so the gate runs and passes against its oracle."""
+    if not os.path.isdir(sf_dir):
+        pytest.skip(f"test data {sf_dir} absent")
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run(
+        [sys.executable, os.path.join(REPO, "scripts", "check_gate.py"),
+         "--sf", sf_dir, "replay_limit_oracle"],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0, (proc.stdout[-3000:], proc.stderr[-3000:])
+    assert "1/1 passed" in proc.stdout

@@ -221,3 +221,53 @@ def test_sweep_warm_mount_no_rescan(spark, tmp_path):
     want = {k: expected[0][k] for k in ("trades_count", "net_pnl", "final_equity")}
     assert got == want
     mount.unpersist()
+
+
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_backtest_result_materialized_once(spark, tmp_path):
+    """run_backtest checkpoints its result: the replay state machine runs on
+    the first action only. Its executed plan is a scan of the stored rows
+    (no FlatMapGroupsInPandas, so no later action can re-enter the Python
+    stage), while the lazy _replay_plan still carries it. A parquet write,
+    an ordered collect and a count on the one result agree row for row,
+    and match the lazy plan's rows."""
+    from finiextestingide_spark.operators.replay import _replay_plan
+
+    ticks = make_ticks(spark, PRICES)
+    scenarios = make_scenarios(
+        spark, [(i, f"s{i}", "X", None, None, i, 0, 0, BASE) for i in range(1, 5)]
+    )
+    res = run_backtest(ticks, scenarios)
+    assert "FlatMapGroupsInPandas" not in _executed_plan(res)
+    lazy = _replay_plan(ticks, scenarios)
+    assert "FlatMapGroupsInPandas" in _executed_plan(lazy)
+
+    path = str(tmp_path / "results")
+    res.write.parquet(path)
+    collected = res.orderBy("scenario_id").collect()
+    assert res.count() == len(collected) == 4
+    assert spark.read.parquet(path).orderBy("scenario_id").collect() == collected
+    assert lazy.orderBy("scenario_id").collect() == collected
+
+
+def test_sweep_ledger_materialized_once(spark, tmp_path):
+    """The sweep op's three actions — ledger write, ranking, count — read one
+    materialized replay result: the ranking's executed plan holds no
+    FlatMapGroupsInPandas, and the written ledger, the ranking and the count
+    agree row for row."""
+    ticks = make_ticks(spark, PRICES)
+    scenarios = make_scenarios(
+        spark,
+        [(1, "a", "X", None, None, 1, 0, 0, BASE), (2, "b", "X", None, None, 2, 0, 0, BASE)],
+    )
+    rows = ledger_rows(run_sweep(spark, ticks, scenarios, {"fast": ["2", "3"]}, sweep_id="m1"))
+    assert "FlatMapGroupsInPandas" not in _executed_plan(rank_runs(rows))
+
+    path = str(tmp_path / "ledger")
+    append_ledger(rows, path)
+    ranked = rank_runs(rows).collect()
+    assert rows.count() == len(ranked) == 4
+    assert rank_runs(read_ledger(spark, path)).collect() == ranked

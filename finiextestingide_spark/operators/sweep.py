@@ -13,15 +13,18 @@ re-executions of a driver loop. Mount reuse is the caller's: ``.persist()``
 the tick frame once and every sweep reads it without a re-scan
 (tests/test_sweep_reporting.py ``test_sweep_warm_mount_no_rescan``).
 
-``run_sweep`` caches the expanded SCENARIO frame, not the ticks. That frame
-is read three times per sweep — ``run_backtest``'s driver-side collect of the
-scenario table, the scenario attach, and the identity join back onto the
-results — and without the cache each read re-runs the grid crossJoin and its
+``run_sweep`` materializes the expanded SCENARIO frame, not the ticks. That
+frame is read three times per sweep — ``run_backtest``'s driver-side collect
+of the scenario table, the scenario attach, and the identity join back onto
+the results — and without it each read re-runs the grid crossJoin and its
 ``map_filter``/``map_concat`` rewrite of ``parameters``. On the perfbench
 ``sweep`` workload (4 vCPUs, seeds 6-9) dropping it took a sweep op from
-4.32-5.33 s to 7.21-9.39 s. The replay result itself is materialized once
-inside ``run_backtest``, so the ledger write and the ranking after it do not
-re-run the replay."""
+4.32-5.33 s to 7.21-9.39 s. It is an eager ``localCheckpoint()`` rather than
+``.cache()``: nothing would own the ``unpersist``, while checkpoint blocks
+are freed by the ContextCleaner once the sweep result is dropped (the same
+owner as ``run_backtest``'s result). The replay result itself is materialized
+once inside ``run_backtest``, so the ledger write and the ranking after it do
+not re-run the replay."""
 
 from __future__ import annotations
 
@@ -29,7 +32,7 @@ import itertools
 from collections.abc import Mapping, Sequence
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 
 from .replay import run_backtest
 
@@ -88,7 +91,7 @@ def run_sweep(
 ) -> DataFrame:
     """One distributed pass over every (scenario, combo); returns replay
     results joined back to sweep identity columns."""
-    sc = sweep_scenarios(spark, scenarios, grid, sweep_id=sweep_id).cache()
+    sc = sweep_scenarios(spark, scenarios, grid, sweep_id=sweep_id).localCheckpoint()
     results = run_backtest(ticks, sc)
     identity = sc.select(
         "scenario_id", "base_scenario_id", "combo_id", "sweep_id", "run_id", "parameters",
@@ -155,7 +158,8 @@ def parameter_sensitivity(ledger: DataFrame, swept_params: Sequence[str]) -> Dat
     per_level = exploded.groupBy("param", "level").agg(
         F.avg("objective").alias("mean_objective"), F.count(F.lit(1)).alias("runs")
     )
-    influence = per_level.groupBy("param").agg(
-        (F.max("mean_objective") - F.min("mean_objective")).alias("influence")
+    by_param = Window.partitionBy("param")
+    return per_level.withColumn(
+        "influence",
+        F.max("mean_objective").over(by_param) - F.min("mean_objective").over(by_param),
     )
-    return per_level.join(influence, "param")

@@ -64,3 +64,35 @@ def test_check_gate_runs_from_any_cwd(tmp_path, sf_dir):
     )
     assert proc.returncode == 0, (proc.stdout[-3000:], proc.stderr[-3000:])
     assert "1/1 passed" in proc.stdout
+
+
+@pytest.mark.skipif(sys.version_info >= (3, 13), reason="zipimporter invalidates lazily")
+def test_python_task_does_not_reread_zip_archives(spark):
+    """A Python task of a build_session session calls
+    importlib.invalidate_caches() (as pyspark does at every task start): no
+    zipimporter re-reads its unchanged archive."""
+
+    def probe(batches):  # nested: pickled by value, the worker cannot import tests/
+        import importlib
+        import sys
+        import zipimport
+
+        before = {
+            k: v._files
+            for k, v in sys.path_importer_cache.items()
+            if isinstance(v, zipimport.zipimporter)
+        }
+        importlib.invalidate_caches()
+        changed = sum(sys.path_importer_cache[k]._files is not f for k, f in before.items())
+        for pdf in batches:
+            yield pdf.assign(zips=len(before), changed=changed)
+
+    rows = (
+        spark.range(4)
+        .repartition(2)
+        .mapInPandas(probe, "id long, zips long, changed long")
+        .collect()
+    )
+    assert len(rows) == 4
+    assert all(r["zips"] > 0 for r in rows)  # workers do import through zips
+    assert [r["changed"] for r in rows] == [0] * 4

@@ -271,3 +271,36 @@ def test_sweep_ledger_materialized_once(spark, tmp_path):
     ranked = rank_runs(rows).collect()
     assert rows.count() == len(ranked) == 4
     assert rank_runs(read_ledger(spark, path)).collect() == ranked
+
+
+def test_sweep_leaves_nothing_materialized(spark):
+    """run_sweep gives what it materializes an owner: after three sweeps are
+    collected and dropped, a driver GC leaves no CacheManager entry, and the
+    ContextCleaner frees every checkpoint the sweeps stored."""
+    import gc
+    import time
+
+    spark.catalog.clearCache()  # earlier tests' caches are not this test's subject
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    jsc = spark.sparkContext._jsc
+
+    def stored_rdds() -> int:  # RDDInfo holds no reference that would pin an RDD
+        return len(jsc.sc().getRDDStorageInfo())
+
+    baseline = stored_rdds()
+    ticks = make_ticks(spark, PRICES)
+    scenarios = make_scenarios(
+        spark,
+        [(1, "a", "X", None, None, 1, 0, 0, BASE), (2, "b", "X", None, None, 2, 0, 0, BASE)],
+    )
+    for i in range(3):
+        rows = run_sweep(spark, ticks, scenarios, {"fast": ["2", "3"]}, sweep_id=f"g{i}")
+        assert len(rows.collect()) == 4
+    del rows
+    gc.collect()
+    assert cache.isEmpty()
+    deadline = time.monotonic() + 60
+    while stored_rdds() > baseline and time.monotonic() < deadline:
+        spark.sparkContext._jvm.System.gc()
+        time.sleep(0.5)
+    assert stored_rdds() <= baseline

@@ -298,6 +298,13 @@ def unigram_logprob_scores(
     )
 
 
+def _floor6(col: Column) -> Column:
+    """Round to 6 decimals with the floor form ``floor(x*1e6 + 0.5)/1e6``:
+    bit-identical in Spark and DuckDB given identical input doubles, where
+    ``round()`` disagrees at half boundaries (see `bigram_logprob_scores`)."""
+    return F.floor(col * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
+
+
 def bigram_logprob_scores(
     docs: DataFrame,
     interp_uni: float = 0.3,
@@ -387,9 +394,6 @@ def bigram_logprob_scores(
         F.count(F.lit(1)).cast("long").alias("n_transitions"),
         F.sum("__lp").alias("__lpsum"),
     )
-    def _floor6(col):
-        return F.floor(col * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
-
     avg = _floor6(F.col("__lpsum").cast("double") / F.col("n_transitions"))
     return (
         docs.select(F.col(id_col))
@@ -611,336 +615,6 @@ def kneser_ney_logprob_scores(
         F.sum("__lp").alias("__lpsum"),
     )
 
-    def _floor6(col):
-        return F.floor(col * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
-
-    avg = _floor6(F.col("__lpsum").cast("double") / F.col("n_transitions"))
-    return (
-        docs.select(F.col(id_col))
-        .join(agg, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce(F.col("n_transitions"), F.lit(0)).cast("long").alias(
-                "n_transitions"
-            ),
-            avg.alias("avg_logprob"),
-            _floor6(F.exp(-avg)).alias("pseudo_ppl"),
-        )
-    )
-
-
-def modified_kneser_ney_logprob_scores(
-    docs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text: str = "text",
-) -> DataFrame:
-    """Corpus-trained MODIFIED Kneser-Ney bigram score per document — the
-    Chen & Goodman (1998) three-discount refinement KenLM actually ships,
-    closing the discount-form delta `kneser_ney_logprob_scores` discloses
-    (remaining delta to true KenLM after this: n-gram ORDER only, 2 vs 5).
-    Instead of one fixed discount D, three discounts are ESTIMATED FROM
-    THE CORPUS via the count-of-counts n_k = |{bigrams with count k}|:
-
-        Y   = n1 / (n1 + 2*n2)
-        D1  = 1 - 2*Y*n2/n1       (applied to transitions seen once)
-        D2  = 2 - 3*Y*n3/n2       (seen twice)
-        D3+ = 3 - 4*Y*n4/n3       (seen three or more times)
-
-        p_MKN(w2|w1) = (c(w1 w2) - D(c(w1 w2))) / c(w1·)  +  gamma(w1) * p_cont(w2)
-        gamma(w1)    = (D1*N1(w1·) + D2*N2(w1·) + D3+*N3+(w1·)) / c(w1·)
-        p_cont(w2)   = N1+(· w2) / |distinct bigram types|
-
-    where N_k(w1·) counts distinct followers of w1 seen exactly k (or 3+)
-    times. gamma redistributes EXACTLY the mass the discounts removed, so
-    the model stays a proper distribution per context. Degenerate-corpus
-    guard: if some n_k = 0 the corresponding D is defined as 0 — when
-    n1/n2 = 0 the discount class is empty (D multiplies an everywhere-zero
-    N_k and never scores a transition), and when n3 = 0 with 4+-count
-    bigrams still present the textbook estimator is undefined, so those
-    transitions take no discount rather than an arbitrary one (KenLM
-    refuses such corpora outright; a quality SCORE should not).
-
-    Determinism (the `kneser_ney_logprob_scores` contract, extended): all
-    inputs to the discounts are integer counts; Y/D1/D2/D3 are evaluated
-    in ONE fixed parenthesization of IEEE double ops — ((k*Y)*n)/m — that
-    the oracle mirrors textually, so both engines compute bit-identical
-    discounts; per-transition ln rounds to 6 decimals into an exact
-    DECIMAL(28,6) sum; the final mean uses the floor form. Scale shape
-    identical to single-discount KN plus ONE more bounded aggregate: the
-    count-of-counts frame is FOUR numbers (broadcast by construction) and
-    the per-context N_k columns ride the existing w1-keyed roll-up —
-    no new shuffle, no new scan."""
-    ws = F.filter(
-        F.split(normalized_text(F.col(text)), " "), lambda x: x != ""
-    )
-    toks = docs.select(F.col(id_col), ws.alias("__ws"))
-    pairs = toks.where(F.size("__ws") >= 2).select(
-        F.col(id_col),
-        F.explode(
-            F.arrays_zip(
-                F.expr("slice(__ws, 1, size(__ws) - 1)"),
-                F.expr("slice(__ws, 2, size(__ws) - 1)"),
-            )
-        ).alias("__p"),
-    ).select(
-        id_col, F.col("__p.0").alias("w1"), F.col("__p.1").alias("w2")
-    )
-    bi = pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("__c12"))
-    left = bi.groupBy("w1").agg(
-        F.sum("__c12").alias("__c1"),
-        F.sum(F.when(F.col("__c12") == 1, 1).otherwise(0)).alias("__nn1"),
-        F.sum(F.when(F.col("__c12") == 2, 1).otherwise(0)).alias("__nn2"),
-        F.sum(F.when(F.col("__c12") >= 3, 1).otherwise(0)).alias("__nn3p"),
-    )
-    right = bi.groupBy("w2").agg(F.count(F.lit(1)).alias("__n1b"))
-    # count-of-counts: four numbers + the type total — bounded by
-    # construction, rides a broadcast crossJoin like __nt in plain KN
-    cc = bi.agg(
-        F.sum(F.when(F.col("__c12") == 1, 1).otherwise(0))
-        .cast("double").alias("__n1"),
-        F.sum(F.when(F.col("__c12") == 2, 1).otherwise(0))
-        .cast("double").alias("__n2"),
-        F.sum(F.when(F.col("__c12") == 3, 1).otherwise(0))
-        .cast("double").alias("__n3"),
-        F.sum(F.when(F.col("__c12") == 4, 1).otherwise(0))
-        .cast("double").alias("__n4"),
-        F.count(F.lit(1)).cast("double").alias("__nt"),
-    )
-    n1, n2 = F.col("__n1"), F.col("__n2")
-    n3, n4 = F.col("__n3"), F.col("__n4")
-    y = F.when(n1 + F.lit(2.0) * n2 > 0, n1 / (n1 + F.lit(2.0) * n2)).otherwise(
-        F.lit(0.0)
-    )
-    cc = cc.withColumn("__y", y)
-    yc = F.col("__y")
-    # greatest(..., 0): Chen-Goodman assumes the count-of-counts decay
-    # (n1 > n2 > n3 ...); on corpora that violate it a raw D_k can go
-    # NEGATIVE, which flips gamma's sign and can push p below zero (ln
-    # undefined — observed live on the trigram layer at sf0.1). KenLM
-    # refuses such corpora without --discount_fallback; a quality SCORE
-    # clamps instead (deterministic, mirrored in the oracle), keeping
-    # 0 <= D_k <= k so every numerator and every gamma stays >= 0.
-    cc = cc.select(
-        "*",
-        F.when(n1 > 0, F.greatest(
-            F.lit(1.0) - ((F.lit(2.0) * yc) * n2) / n1, F.lit(0.0)
-        )).otherwise(F.lit(0.0)).alias("__d1"),
-        F.when(n2 > 0, F.greatest(
-            F.lit(2.0) - ((F.lit(3.0) * yc) * n3) / n2, F.lit(0.0)
-        )).otherwise(F.lit(0.0)).alias("__d2"),
-        F.when(n3 > 0, F.greatest(
-            F.lit(3.0) - ((F.lit(4.0) * yc) * n4) / n3, F.lit(0.0)
-        )).otherwise(F.lit(0.0)).alias("__d3"),
-    ).select("__nt", "__d1", "__d2", "__d3")
-
-    c12 = F.col("__c12").cast("double")
-    d_of_c = (
-        F.when(F.col("__c12") == 1, F.col("__d1"))
-        .when(F.col("__c12") == 2, F.col("__d2"))
-        .otherwise(F.col("__d3"))
-    )
-    c1 = F.col("__c1").cast("double")
-    gamma = (
-        (F.col("__d1") * F.col("__nn1"))
-        + (F.col("__d2") * F.col("__nn2"))
-        + (F.col("__d3") * F.col("__nn3p"))
-    ) / c1
-    p = (c12 - d_of_c) / c1 + gamma * (F.col("__n1b") / F.col("__nt"))
-    scored = (
-        pairs.join(bi, ["w1", "w2"])
-        .join(left, ["w1"])
-        .join(right, ["w2"])
-        .crossJoin(F.broadcast(cc))
-        .select(
-            F.col(id_col),
-            F.round(F.log(p), 6).cast("decimal(28,6)").alias("__lp"),
-        )
-    )
-    agg = scored.groupBy(id_col).agg(
-        F.count(F.lit(1)).cast("long").alias("n_transitions"),
-        F.sum("__lp").alias("__lpsum"),
-    )
-
-    def _floor6(col):
-        return F.floor(col * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
-
-    avg = _floor6(F.col("__lpsum").cast("double") / F.col("n_transitions"))
-    return (
-        docs.select(F.col(id_col))
-        .join(agg, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce(F.col("n_transitions"), F.lit(0)).cast("long").alias(
-                "n_transitions"
-            ),
-            avg.alias("avg_logprob"),
-            _floor6(F.exp(-avg)).alias("pseudo_ppl"),
-        )
-    )
-
-
-def trigram_mkn_logprob_scores(
-    docs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text: str = "text",
-) -> DataFrame:
-    """Corpus-trained TRIGRAM modified-Kneser-Ney score per document — the
-    order-3 step of the KenLM ladder (unigram -> interpolated bigram ->
-    KN -> modified KN -> THIS), with the detail that distinguishes real
-    KenLM from naive stacking: the backoff layer uses CONTINUATION counts,
-    not raw counts (Chen & Goodman 1998; lower orders answer "how many
-    distinct contexts precede this event", because they are only ever
-    consulted when the higher order backed off a novel context).
-
-        p3(w3|w1 w2) = (c3(w1w2w3) - D3(c3)) / c3(w1w2 ·)
-                       + gamma3(w1 w2) * p2c(w3|w2)
-        p2c(w3|w2)   = (cc2(w2w3) - D2(cc2)) / cc2(w2 ·)
-                       + gamma2(w2) * p1c(w3)
-        p1c(w3)      = |{w2 : cc2(w2 w3) > 0}| / |distinct (w2,w3) types|
-
-    where cc2(w2w3) = |{w1 : c3(w1w2w3) > 0}| is the bigram CONTINUATION
-    count; D3(.) are the three trigram discounts estimated from the
-    trigram count-of-counts, D2(.) the three backoff discounts estimated
-    from the count-of-counts OF THE CONTINUATION COUNTS; each gamma
-    redistributes exactly the mass its layer's discounts removed. The
-    degenerate-count fallback (D_k = 0 when n_k = 0) and the full
-    determinism contract of `modified_kneser_ney_logprob_scores` apply at
-    both layers. Docs with < 3 tokens have no trigram transitions and
-    null scores. Remaining delta to a 5-gram KenLM: two more orders of
-    the same recurrence (and vocabulary pruning).
-
-    Scale shape: ONE trigram-keyed aggregate over the narrow transition
-    stream is the only corpus-proportional pass; every other table is a
-    roll-up OF that aggregate (h-keyed, (w2,w3)-keyed, w2-keyed,
-    w3-keyed) — all map-side combined; the two count-of-counts frames
-    are four numbers each (broadcast); model joins are unhinted (the
-    r13 join-choice rule)."""
-    ws = F.filter(
-        F.split(normalized_text(F.col(text)), " "), lambda x: x != ""
-    )
-    toks = docs.select(F.col(id_col), ws.alias("__ws"))
-    trips = toks.where(F.size("__ws") >= 3).select(
-        F.col(id_col),
-        F.explode(
-            F.arrays_zip(
-                F.expr("slice(__ws, 1, size(__ws) - 2)"),
-                F.expr("slice(__ws, 2, size(__ws) - 2)"),
-                F.expr("slice(__ws, 3, size(__ws) - 2)"),
-            )
-        ).alias("__t"),
-    ).select(
-        id_col,
-        F.col("__t.0").alias("w1"),
-        F.col("__t.1").alias("w2"),
-        F.col("__t.2").alias("w3"),
-    )
-    tri = trips.groupBy("w1", "w2", "w3").agg(F.count(F.lit(1)).alias("__c3"))
-    h = tri.groupBy("w1", "w2").agg(
-        F.sum("__c3").alias("__h"),
-        F.sum(F.when(F.col("__c3") == 1, 1).otherwise(0)).alias("__hn1"),
-        F.sum(F.when(F.col("__c3") == 2, 1).otherwise(0)).alias("__hn2"),
-        F.sum(F.when(F.col("__c3") >= 3, 1).otherwise(0)).alias("__hn3p"),
-    )
-    # tri rows are DISTINCT (w1,w2,w3), so count(*) per (w2,w3) IS the
-    # continuation count |{w1}|
-    cc2 = tri.groupBy("w2", "w3").agg(F.count(F.lit(1)).alias("__cc2"))
-    w2r = cc2.groupBy("w2").agg(
-        F.sum("__cc2").alias("__t2"),
-        F.sum(F.when(F.col("__cc2") == 1, 1).otherwise(0)).alias("__wn1"),
-        F.sum(F.when(F.col("__cc2") == 2, 1).otherwise(0)).alias("__wn2"),
-        F.sum(F.when(F.col("__cc2") >= 3, 1).otherwise(0)).alias("__wn3p"),
-    )
-    ctx1 = cc2.groupBy("w3").agg(F.count(F.lit(1)).alias("__c1b"))
-
-    def _discounts(counts: DataFrame, cnt_col: str, prefix: str) -> DataFrame:
-        cc = counts.agg(
-            F.sum(F.when(F.col(cnt_col) == 1, 1).otherwise(0))
-            .cast("double").alias("__n1"),
-            F.sum(F.when(F.col(cnt_col) == 2, 1).otherwise(0))
-            .cast("double").alias("__n2"),
-            F.sum(F.when(F.col(cnt_col) == 3, 1).otherwise(0))
-            .cast("double").alias("__n3"),
-            F.sum(F.when(F.col(cnt_col) == 4, 1).otherwise(0))
-            .cast("double").alias("__n4"),
-            F.count(F.lit(1)).cast("double").alias("__nt"),
-        )
-        n1, n2 = F.col("__n1"), F.col("__n2")
-        n3, n4 = F.col("__n3"), F.col("__n4")
-        y = F.when(
-            n1 + F.lit(2.0) * n2 > 0, n1 / (n1 + F.lit(2.0) * n2)
-        ).otherwise(F.lit(0.0))
-        cc = cc.withColumn("__y", y)
-        yc = F.col("__y")
-        # greatest(..., 0): see modified_kneser_ney_logprob_scores — a raw
-        # D_k goes negative when the count-of-counts fail to decay, which
-        # flips gamma's sign and can push p below 0 (observed live at the
-        # trigram layer on sf0.1); clamping keeps both layers proper.
-        return cc.select(
-            F.col("__nt").alias(f"{prefix}nt"),
-            F.when(n1 > 0, F.greatest(
-                F.lit(1.0) - ((F.lit(2.0) * yc) * n2) / n1, F.lit(0.0)
-            )).otherwise(F.lit(0.0)).alias(f"{prefix}d1"),
-            F.when(n2 > 0, F.greatest(
-                F.lit(2.0) - ((F.lit(3.0) * yc) * n3) / n2, F.lit(0.0)
-            )).otherwise(F.lit(0.0)).alias(f"{prefix}d2"),
-            F.when(n3 > 0, F.greatest(
-                F.lit(3.0) - ((F.lit(4.0) * yc) * n4) / n3, F.lit(0.0)
-            )).otherwise(F.lit(0.0)).alias(f"{prefix}d3"),
-        )
-
-    d3 = _discounts(tri, "__c3", "__a")       # trigram-layer discounts
-    d2 = _discounts(cc2, "__cc2", "__b")      # continuation-layer discounts
-
-    c3 = F.col("__c3").cast("double")
-    d3_of = (
-        F.when(F.col("__c3") == 1, F.col("__ad1"))
-        .when(F.col("__c3") == 2, F.col("__ad2"))
-        .otherwise(F.col("__ad3"))
-    )
-    hh = F.col("__h").cast("double")
-    g3 = (
-        (F.col("__ad1") * F.col("__hn1"))
-        + (F.col("__ad2") * F.col("__hn2"))
-        + (F.col("__ad3") * F.col("__hn3p"))
-    ) / hh
-    cc2v = F.col("__cc2").cast("double")
-    d2_of = (
-        F.when(F.col("__cc2") == 1, F.col("__bd1"))
-        .when(F.col("__cc2") == 2, F.col("__bd2"))
-        .otherwise(F.col("__bd3"))
-    )
-    t2 = F.col("__t2").cast("double")
-    g2 = (
-        (F.col("__bd1") * F.col("__wn1"))
-        + (F.col("__bd2") * F.col("__wn2"))
-        + (F.col("__bd3") * F.col("__wn3p"))
-    ) / t2
-    p1 = F.col("__c1b") / F.col("__bnt")
-    p2 = (cc2v - d2_of) / t2 + g2 * p1
-    p = (c3 - d3_of) / hh + g3 * p2
-    scored = (
-        trips.join(tri, ["w1", "w2", "w3"])
-        .join(h, ["w1", "w2"])
-        .join(cc2, ["w2", "w3"])
-        .join(w2r, ["w2"])
-        .join(ctx1, ["w3"])
-        .crossJoin(F.broadcast(d3))
-        .crossJoin(F.broadcast(d2))
-        .select(
-            F.col(id_col),
-            F.round(F.log(p), 6).cast("decimal(28,6)").alias("__lp"),
-        )
-    )
-    agg = scored.groupBy(id_col).agg(
-        F.count(F.lit(1)).cast("long").alias("n_transitions"),
-        F.sum("__lp").alias("__lpsum"),
-    )
-
-    def _floor6(col):
-        return F.floor(col * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
-
     avg = _floor6(F.col("__lpsum").cast("double") / F.col("n_transitions"))
     return (
         docs.select(F.col(id_col))
@@ -961,32 +635,38 @@ def ngram_mkn_logprob_scores(
     *,
     order: int = 5,
     min_word_count: int | None = None,
-    reuse_model: bool = False,
     id_col: str = "doc_id",
     text: str = "text",
 ) -> DataFrame:
     """Corpus-trained order-N MODIFIED Kneser-Ney score per document — the
-    full KenLM recurrence (Chen & Goodman 1998) at arbitrary ``order``,
-    completing the LM ladder (reference parity target: the CCNet-recipe
-    5-gram KenLM perplexity filter; FiniexTestingIDE has no LM surface —
-    this extends the engine's quality-signal family the way
-    `trigram_mkn_logprob_scores` documents). ``order=2`` reproduces
-    `modified_kneser_ney_logprob_scores` and ``order=3``
-    `trigram_mkn_logprob_scores` BIT-FOR-BIT (property-pinned): the
-    recurrence below is the same expression tree those operators spell
-    out by hand.
+    KenLM recurrence (Chen & Goodman 1998) at arbitrary ``order``, the top
+    of the LM ladder (unigram -> interpolated bigram -> KN -> this).
+    Reference parity target: the CCNet-recipe 5-gram KenLM perplexity
+    filter; FiniexTestingIDE has no LM surface, so this extends the
+    engine's quality-signal family. The bigram and trigram gates are
+    ``order=2`` and ``order=3``.
 
         p_k(w|ctx_k) = (a_k(ctx_k w) - D_k(a_k)) / t_k(ctx_k)
                        + gamma_k(ctx_k) * p_{k-1}(w|ctx_{k-1})
+        gamma_k(ctx) = (D_k1*N_1(ctx .) + D_k2*N_2(ctx .) + D_k3*N_3+(ctx .))
+                       / t_k(ctx)
         p_1(w)       = N_{1+}(. w) / |distinct level-2 types|
 
     where a_N = raw N-gram counts and each lower level's a_k is the
     CONTINUATION count (distinct left-extensions of the level-(k+1)
-    support); D_k are that level's three Chen-Goodman discounts estimated
-    from ITS count-of-counts (clamped at 0 — see the trigram docstring
-    for the live sf0.1 lesson), and each gamma redistributes exactly the
-    mass its level discounted. Docs with < ``order`` tokens have no
-    transitions and null scores.
+    support: lower orders are only consulted after the higher order
+    backed off, so they count distinct preceding contexts, not
+    occurrences). t_k(ctx) sums a_k over the context's followers and
+    N_j(ctx .) counts followers with a_k = j (or >= 3). Each level's three
+    discounts come from ITS count-of-counts n_j = |{types with a_k = j}|:
+
+        Y = n1 / (n1 + 2*n2)
+        D_k1 = 1 - 2*Y*n2/n1,  D_k2 = 2 - 3*Y*n3/n2,  D_k3 = 3 - 4*Y*n4/n3
+
+    each clamped at 0, and 0 when its denominator count is 0 (see
+    ``_discounts``). gamma redistributes exactly the mass its level
+    discounted, so every context stays a proper distribution. Docs with
+    < ``order`` tokens have no transitions and null scores.
 
     ``min_word_count`` (opt-in) adds count-threshold VOCABULARY PRUNING —
     the preprocessing step real KenLM pipelines run before estimation:
@@ -996,6 +676,12 @@ def ngram_mkn_logprob_scores(
     Estimation then proceeds over the mapped stream unchanged, exactly
     as if the corpus had been written with <unk> in place.
 
+    Determinism: every model value derives from integer counts; the
+    discounts and the recurrence are evaluated in ONE fixed
+    parenthesization of IEEE double ops that the DuckDB oracles mirror
+    textually; each transition's ln rounds to 6 decimals into an exact
+    DECIMAL(28,6) sum; the per-doc mean uses the floor form (`_floor6`).
+
     Scale shape: without pruning, ONE N-gram-keyed aggregate over the
     narrow zipped transition stream is the only corpus-proportional
     pass; every model table is a roll-up OF that aggregate (each level's
@@ -1003,32 +689,23 @@ def ngram_mkn_logprob_scores(
     N-1 count-of-counts frames are four broadcast doubles each, and
     model joins are unhinted (AQE picks build sides). Pruning adds the
     vocabulary count (word-keyed, map-side combined, narrow output) plus
-    a METADATA-weight remap (r15, guide §2.3): distinct (doc, word)
-    pairs meet the rare set, matched pairs fold to a per-doc rare list,
-    and token arrays are rewritten in place — the occurrence stream
-    itself never crosses an exchange for the remap (the former shape
-    shipped every occurrence through the rare join AND a collect_list
-    regroup; the rare set is Zipf-heavy and NOT broadcastable at corpus
-    scale, which is exactly why the occurrence stream must not be the
-    join side). After the remap the unpruned shape resumes.
+    a metadata-weight remap: distinct (doc, word) pairs meet the rare
+    set, matched pairs fold to a per-doc rare list, and token arrays are
+    rewritten in place — the occurrence stream itself never crosses an
+    exchange (the rare set is Zipf-heavy and NOT broadcastable at corpus
+    scale, so the occurrence stream must not be the join side).
 
-    Physical-reuse caveat (the trigram operator shares it): the lazy DAG
-    re-derives the shared upstream (tokenize / remap / top-level count)
-    once per model-table branch — Spark only collapses identical
-    EXCHANGES, not identical aggregates. The per-branch recompute is the
-    same single pass each time, so scaling stays linear (SCALE.md
-    measures it). ``reuse_model=True`` makes the production choice real:
-    the (remapped) token frame, the level-N count table, and each lower
-    level's fold are EAGERLY materialized (``localCheckpoint`` — small
-    up-front jobs at build time), so every lower level folds
-    ~types-sized materialized data only — bit-identical results (all
-    model values derive deterministically from integer counts; equality
-    pinned by pytest), at the cost of executor storage until the frames
-    are dropped. r15 note: this was a lazy ``persist``, under which the
-    concurrent model-table stages each recomputed not-yet-cached
-    partitions of the same corpus pass; the eager checkpoint computes it
-    exactly once, and is never plan-matched across separately built
-    queries (each invocation recomputes from the parquet inputs).
+    Materialization cost: the (remapped) token frame, the level-N count
+    table and each lower level's fold are eager ``localCheckpoint()``s,
+    because the model-table branches of one plan would otherwise each
+    re-derive that shared upstream (Spark collapses identical exchanges,
+    not identical aggregates). So this call runs those ``order`` eager
+    checkpoints as Spark jobs before it returns, and their blocks stay in
+    executor storage until the returned frame is dropped (the
+    ContextCleaner frees them; nothing is plan-matched across separately
+    built queries, so each call recomputes from its inputs). Checkpoints
+    store the computed counts unchanged, so the scores are those of the
+    lazy plan.
     """
     if order < 2:
         raise ValueError("ngram_mkn_logprob_scores: order must be >= 2")
@@ -1037,22 +714,10 @@ def ngram_mkn_logprob_scores(
     )
     toks = docs.select(F.col(id_col), ws.alias("__ws"))
     if min_word_count is not None and min_word_count > 1:
-        # r15 (guide §2.3 "shuffle keys and metadata instead of payloads"):
-        # the remap used to ship every token OCCURRENCE through two wide
-        # exchanges — posexplode -> join rare on word -> collect_list +
-        # array_sort regroup by doc — i.e. the whole token stream crossed
-        # the wire twice to rewrite the (usually few) rare words. Now only
-        # per-doc DISTINCT (doc, word) pairs meet the rare set, the
-        # matched pairs (sparse by construction: corpus-frequency <
-        # min_word_count words) fold to a per-doc rare list, and the token
-        # arrays are rewritten IN PLACE with a row-local transform — the
-        # occurrence stream itself never shuffles. The vocabulary count is
-        # unchanged (word-keyed, map-side combined, narrow output). Docs
-        # with no rare words skip the transform entirely (null branch),
-        # so a corpus the pruning does not touch pays only the count.
-        # Bit-identical: the same set of words (corpus frequency <
-        # min_word_count) maps to <unk> at the same positions; array
-        # order is the original order (no sort round-trip).
+        # only per-doc DISTINCT (doc, word) pairs meet the rare set, and
+        # token arrays are rewritten in place with a row-local transform:
+        # the occurrence stream never shuffles, array order is kept, and
+        # docs with no rare word skip the transform (null branch)
         rare = (
             toks.select(F.explode("__ws").alias("__w"))
             .groupBy("__w")
@@ -1079,23 +744,10 @@ def ngram_mkn_logprob_scores(
             )
             .alias("__ws"),
         )
-    if reuse_model:
-        # r15 (guide §5 caching rule + §1.4 measurement honesty): was
-        # persist(MEMORY_AND_DISK). A lazy persist materializes DURING the
-        # one consuming job, where the model-table branches run as
-        # CONCURRENT stages — each stage that reaches an uncomputed cached
-        # partition computes it itself, so the corpus pass was re-run by
-        # several branches in parallel before the cache filled (measured:
-        # exec barely improved over reuse_model=False). An EAGER
-        # localCheckpoint materializes ONCE up front, every branch reads
-        # the checkpointed blocks, and — unlike persist — the RDD is never
-        # plan-matched by the CacheManager across separately-built queries,
-        # so repeated bench invocations each recompute from the parquet
-        # inputs (no cross-run result reuse) and the blocks are freed by GC
-        # when the frame is dropped (persist leaked across invocations
-        # until session end). Bit-identical: checkpointing stores the
-        # computed rows unchanged (the reuse-equality pytest pins it).
-        toks = toks.localCheckpoint()
+    # eager, not a lazy persist: the model-table branches run as concurrent
+    # stages of one job, and each would compute a not-yet-cached partition
+    # itself
+    toks = toks.localCheckpoint()
     wcols = [f"w{j + 1}" for j in range(order)]
     grams = (
         toks.where(F.size("__ws") >= order)
@@ -1118,26 +770,22 @@ def ngram_mkn_logprob_scores(
     # below is a distinct-left-extension fold of the level above (rows of
     # lvl[k+1] are distinct (k+1)-gram types, so count(*) per k-suffix IS
     # the continuation count)
-    top = grams.groupBy(*wcols).agg(F.count(F.lit(1)).alias(f"__c{order}"))
-    if reuse_model:
-        # see the toks checkpoint above — same reasoning for the level-N
-        # count table every lower level and discount frame folds
-        top = top.localCheckpoint()
+    top = (
+        grams.groupBy(*wcols)
+        .agg(F.count(F.lit(1)).alias(f"__c{order}"))
+        .localCheckpoint()
+    )
     lvl: dict[int, DataFrame] = {order: top}
     for k in range(order - 1, 1, -1):
+        # each level has four consumers (its context roll-up, discount
+        # frame, model step and the next fold down); checkpointing keeps
+        # the fold chain from re-running once per consumer
         lvl[k] = (
             lvl[k + 1]
             .groupBy(*wcols[order - k:])
             .agg(F.count(F.lit(1)).alias(f"__c{k}"))
+            .localCheckpoint()
         )
-        if reuse_model:
-            # each lower level is read by FOUR consumers (its per-context
-            # roll-up, its discount frame, its model step, and the next
-            # fold down); un-materialized, the lazy DAG re-runs the fold
-            # chain from `top` once per consumer — O(order^2) type-table
-            # aggregates. One small eager job per level pins each fold to
-            # exactly one computation (same integer counts, bit-identical).
-            lvl[k] = lvl[k].localCheckpoint()
     ctx1 = lvl[2].groupBy(wcols[-1]).agg(F.count(F.lit(1)).alias("__c1b"))
     # per-context totals + N_k columns, one roll-up per level
     ctxs: dict[int, DataFrame] = {}
@@ -1179,8 +827,14 @@ def ngram_mkn_logprob_scores(
         ).otherwise(F.lit(0.0))
         cc = cc.withColumn("__y", y)
         yc = F.col("__y")
-        # greatest(..., 0): the count-of-counts decay clamp — see
-        # modified_kneser_ney_logprob_scores
+        # greatest(..., 0): Chen-Goodman assumes the count-of-counts decay
+        # (n1 > n2 > n3 ...); where they do not, a raw D can go negative,
+        # flip gamma's sign and push p below zero (ln undefined — seen at
+        # the trigram level on sf0.1). KenLM refuses such corpora without
+        # --discount_fallback; a quality score clamps instead, keeping
+        # 0 <= D_j <= j. A D whose denominator count is 0 is 0: for n1/n2
+        # its class is empty, and for n3 = 0 with 4+-count types present
+        # the estimator is undefined, so those types take no discount.
         return cc.select(
             F.col("__nt").alias(f"{prefix}nt"),
             F.when(n1 > 0, F.greatest(
@@ -1208,7 +862,7 @@ def ngram_mkn_logprob_scores(
         joined = joined.crossJoin(F.broadcast(discs[k]))
 
     # the recurrence, built bottom-up — ONE fixed parenthesization the
-    # oracle mirrors textually (the trigram determinism contract)
+    # oracles mirror textually
     p = F.col("__c1b") / F.col("__p2nt")
     for k in range(2, order + 1):
         ck = F.col(f"__c{k}").cast("double")
@@ -1233,9 +887,6 @@ def ngram_mkn_logprob_scores(
         F.count(F.lit(1)).cast("long").alias("n_transitions"),
         F.sum("__lp").alias("__lpsum"),
     )
-
-    def _floor6(col):
-        return F.floor(col * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
 
     avg = _floor6(F.col("__lpsum").cast("double") / F.col("n_transitions"))
     return (

@@ -20,11 +20,16 @@ from finiextestingide_spark.testing import compare_frames
 QUERIES = all_queries()
 
 #: the live trading family (per-symbol ReplaySession over a stream):
-#: ~19 s together at sf0.001 on local[4]
+#: ~19 s together at sf0.001 on local[4]; the order-2 and order-3
+#: modified-KN gates, whose hand-written oracles check the order-N
+#: scorer's level loop independently: ~+15 s (this module's default run
+#: went 33.0 -> 54.6 s on 4 vCPUs, 6.5 s of it the FutureWarning test)
 DEFAULT_ORACLE_SLICE = (
     "streaming_live_replay",
     "streaming_live_limit",
     "streaming_live_signal",
+    "modified_kn_perplexity",
+    "trigram_mkn_perplexity",
 )
 
 
@@ -83,3 +88,18 @@ def test_driver_window_is_curated():
     assert len(set(CURATED_ORDER)) == len(CURATED_ORDER)
     window_no_oracle = [n for n in CURATED_ORDER[:50] if QUERIES[n].sql is None]
     assert window_no_oracle == []
+
+
+def test_live_gate_workers_raise_no_future_warning(spark, sf_dir, duck):
+    """The live gate runs with FutureWarning turned into an error in its
+    Python workers: PySpark's applyInPandasWithState output concat used to
+    print a pandas deprecation per worker (see streaming/__init__.py), and
+    the rows still match the oracle."""
+    q = QUERIES["streaming_live_replay"]
+    env = spark.sparkContext.environment
+    env["PYTHONWARNINGS"] = "error::FutureWarning"
+    try:
+        got = q.fn(spark, sf_dir).toPandas()
+    finally:
+        del env["PYTHONWARNINGS"]
+    assert not compare_frames(got, duck.execute(q.sql).fetchdf())

@@ -583,9 +583,7 @@ def test_modified_kn_matches_direct_evaluation(spark, pairs):
     import math
     from collections import Counter
 
-    from finiextestingide_spark.operators.text import (
-        modified_kneser_ney_logprob_scores,
-    )
+    from finiextestingide_spark.operators.text import ngram_mkn_logprob_scores
 
     docs = spark.createDataFrame(
         [(i, f"{a} {b}") for i, (a, b) in enumerate(pairs)],
@@ -593,7 +591,7 @@ def test_modified_kn_matches_direct_evaluation(spark, pairs):
     )
     got = {
         r.doc_id: r.avg_logprob
-        for r in modified_kneser_ney_logprob_scores(docs).collect()
+        for r in ngram_mkn_logprob_scores(docs, order=2).collect()
     }
 
     # direct evaluation, mirroring the engine's exact float ops
@@ -710,7 +708,7 @@ def test_trigram_mkn_matches_direct_evaluation(spark, trips):
     import math
     from collections import Counter
 
-    from finiextestingide_spark.operators.text import trigram_mkn_logprob_scores
+    from finiextestingide_spark.operators.text import ngram_mkn_logprob_scores
 
     docs = spark.createDataFrame(
         [(i, f"{a} {b} {c}") for i, (a, b, c) in enumerate(trips)],
@@ -718,7 +716,7 @@ def test_trigram_mkn_matches_direct_evaluation(spark, trips):
     )
     got = {
         r.doc_id: r.avg_logprob
-        for r in trigram_mkn_logprob_scores(docs).collect()
+        for r in ngram_mkn_logprob_scores(docs, order=3).collect()
     }
 
     tri = Counter(trips)
@@ -839,6 +837,7 @@ def _ref_ngram_mkn(doc_words, order, min_wc=None):
     return out
 
 
+@pytest.mark.parametrize("order", [2, 3, 4, 5])
 @settings(max_examples=6, deadline=None, suppress_health_check=list(HealthCheck))
 @given(
     docs=st.lists(
@@ -851,10 +850,10 @@ def _ref_ngram_mkn(doc_words, order, min_wc=None):
         max_size=10,
     )
 )
-def test_ngram_mkn_order5_pruned_matches_direct_evaluation(spark, docs):
-    """The FULL ladder rung: order-5 recurrence (four continuation levels,
-    four discount sets) WITH <unk> vocabulary pruning, against the
-    independent direct evaluation — multi-transition docs exercise the
+def test_ngram_mkn_order5_pruned_matches_direct_evaluation(spark, order, docs):
+    """The order-N recurrence at orders 2-5 (up to four continuation
+    levels and four discount sets) WITH <unk> vocabulary pruning, against
+    the independent direct evaluation — multi-transition docs exercise the
     decimal-exact sum + floor-form mean too."""
     from finiextestingide_spark.operators.text import ngram_mkn_logprob_scores
 
@@ -865,72 +864,8 @@ def test_ngram_mkn_order5_pruned_matches_direct_evaluation(spark, docs):
     got = {
         r.doc_id: (r.n_transitions, r.avg_logprob, r.pseudo_ppl)
         for r in ngram_mkn_logprob_scores(
-            sdf, order=5, min_word_count=2
+            sdf, order=order, min_word_count=2
         ).collect()
     }
-    want = _ref_ngram_mkn(dw, 5, min_wc=2)
+    want = _ref_ngram_mkn(dw, order, min_wc=2)
     assert got == want
-
-
-@settings(max_examples=4, deadline=None, suppress_health_check=list(HealthCheck))
-@given(
-    docs=st.lists(
-        st.lists(
-            st.sampled_from(["aa", "bb", "cc", "dd"]), min_size=2, max_size=9
-        ),
-        min_size=1,
-        max_size=8,
-    )
-)
-def test_ngram_mkn_reproduces_dedicated_orders(spark, docs):
-    """ngram_mkn_logprob_scores(order=2) == modified_kneser_ney_logprob_
-    scores and (order=3) == trigram_mkn_logprob_scores BIT-FOR-BIT — the
-    generalized recurrence is the same expression tree the dedicated
-    operators spell out by hand."""
-    from finiextestingide_spark.operators.text import (
-        modified_kneser_ney_logprob_scores,
-        ngram_mkn_logprob_scores,
-        trigram_mkn_logprob_scores,
-    )
-
-    sdf = spark.createDataFrame(
-        [(i, " ".join(ws)) for i, ws in enumerate(docs)],
-        "doc_id long, text string",
-    )
-
-    def rows(df):
-        return sorted(
-            (r.doc_id, r.n_transitions, r.avg_logprob, r.pseudo_ppl)
-            for r in df.collect()
-        )
-
-    assert rows(ngram_mkn_logprob_scores(sdf, order=2)) == rows(
-        modified_kneser_ney_logprob_scores(sdf)
-    )
-    assert rows(ngram_mkn_logprob_scores(sdf, order=3)) == rows(
-        trigram_mkn_logprob_scores(sdf)
-    )
-
-
-def test_ngram_mkn_reuse_model_identical(spark):
-    """reuse_model=True (persist the token frame + top count table) must
-    be a pure physical choice: bit-identical output to the lazy path."""
-    from finiextestingide_spark.operators.text import ngram_mkn_logprob_scores
-
-    docs = spark.createDataFrame(
-        [(i, " ".join(["aa", "bb", "cc", "dd", "aa", "bb"][: 4 + i % 3]))
-         for i in range(8)],
-        "doc_id long, text string",
-    )
-    def rows(df):
-        return sorted(
-            (r.doc_id, r.n_transitions, r.avg_logprob, r.pseudo_ppl)
-            for r in df.collect()
-        )
-    assert rows(
-        ngram_mkn_logprob_scores(docs, order=4, min_word_count=2)
-    ) == rows(
-        ngram_mkn_logprob_scores(
-            docs, order=4, min_word_count=2, reuse_model=True
-        )
-    )

@@ -341,7 +341,7 @@ def test_modified_kneser_ney_three_discounts(spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     out = {
         r.doc_id: r
-        for r in tx.modified_kneser_ney_logprob_scores(docs).collect()
+        for r in tx.ngram_mkn_logprob_scores(docs, order=2).collect()
     }
     y = 1.0 / (1.0 + 2.0 * 1.0)
     d1 = 1.0 - ((2.0 * y) * 1.0) / 1.0
@@ -384,7 +384,7 @@ def test_modified_kneser_ney_degenerate_counts(spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     out = {
         r.doc_id: r
-        for r in tx.modified_kneser_ney_logprob_scores(docs).collect()
+        for r in tx.ngram_mkn_logprob_scores(docs, order=2).collect()
     }
     # n1=1, n2=1, n3=0, n4=1, nt=3; Y=1/3; D1=1/3; D2 = 2 - 3Y*0/1 = 2; D3=0
     # p(v->w) = (4-0)/4 + 0 = 1 -> ln = 0
@@ -411,7 +411,8 @@ def test_trigram_mkn_continuation_backoff(spark):
     )
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     out = {
-        r.doc_id: r for r in tx.trigram_mkn_logprob_scores(docs).collect()
+        r.doc_id: r
+        for r in tx.ngram_mkn_logprob_scores(docs, order=3).collect()
     }
     # trigram-layer discounts (same arithmetic as the bigram MKN test)
     y = 1.0 / (1.0 + 2.0 * 1.0)
@@ -466,7 +467,7 @@ def test_modified_kneser_ney_clamps_negative_discounts(spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     out = {
         r.doc_id: r
-        for r in tx.modified_kneser_ney_logprob_scores(docs).collect()
+        for r in tx.ngram_mkn_logprob_scores(docs, order=2).collect()
     }
     assert out[4].avg_logprob == 0.0 and out[4].pseudo_ppl == 1.0
     assert out[7].avg_logprob == 0.0

@@ -72,6 +72,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from ..operators.replay import merge_signal_rows
+
 TRADE_SCHEMA = StructType(
     [
         StructField("symbol", StringType()),
@@ -101,32 +103,6 @@ TRADE_SCHEMA = StructType(
 # telemetry, the reference's [CLIPPING] log channel)
 _CLIP_LOG = logging.getLogger("finiextestingide_spark.clipping")
 
-
-def _merge_signals(ticks: DataFrame, signals: DataFrame) -> DataFrame:
-    """Union the signal stream into the tick stream: signal rows carry
-    NaN quotes, a discriminator, and time_msc derived from sig_ts.
-    Mirrors the batch ``merge_signal_rows`` (operators/replay.py): when
-    the tick stream carries ``collected_msc``, signal rows get it stamped
-    from sig_ts too — a null there would break the session drive's int64
-    cast on the documented optional-column wire contract."""
-    sig = signals.select(
-        F.col("symbol"),
-        F.col("sig_ts").alias("timestamp"),
-        F.unix_millis("sig_ts").alias("time_msc"),
-        *(
-            [F.unix_millis("sig_ts").alias("collected_msc")]
-            if "collected_msc" in ticks.columns
-            else []
-        ),
-        F.lit(None).cast("double").alias("bid"),
-        F.lit(None).cast("double").alias("ask"),
-        F.lit(1).alias("__is_sig"),
-        F.col("score").cast("double").alias("__score"),
-    )
-    t = ticks.withColumn("__is_sig", F.lit(0)).withColumn(
-        "__score", F.lit(None).cast("double")
-    )
-    return t.unionByName(sig, allowMissingColumns=True)
 
 # --- live sessions: ANY strategy, the WHOLE batch surface --------------------
 
@@ -226,7 +202,7 @@ def bootstrap_live_sessions(
             columns=["symbol", "blob", "n_trades", "saved_at"],
         )
 
-    src = ticks if signals is None else _merge_signals(ticks, signals)
+    src = ticks if signals is None else merge_signal_rows(ticks, signals)
     return src.groupBy("symbol").applyInPandas(snap, _bootstrap_schema("symbol"))
 
 
@@ -344,7 +320,7 @@ def bootstrap_account_sessions(
             columns=["account", "blob", "n_trades", "saved_at"],
         )
 
-    src = ticks if signals is None else _merge_signals(ticks, signals)
+    src = ticks if signals is None else merge_signal_rows(ticks, signals)
     src = (
         src.withColumn("__account", F.lit("ACCOUNT"))
         if account_col is None
@@ -617,7 +593,7 @@ def live_backtest(
         if rows:
             yield pd.DataFrame(rows, columns=[f.name for f in TRADE_SCHEMA.fields])
 
-    src = ticks if signals is None else _merge_signals(ticks, signals)
+    src = ticks if signals is None else merge_signal_rows(ticks, signals)
     if bootstrap is not None:
         from .bootstrap import check_staleness
 
@@ -883,7 +859,7 @@ def live_backtest_account(
         if out:
             yield pd.DataFrame(out, columns=[f.name for f in TRADE_SCHEMA.fields])
 
-    src = ticks if signals is None else _merge_signals(ticks, signals)
+    src = ticks if signals is None else merge_signal_rows(ticks, signals)
     src = (
         src.withColumn("__account", F.lit("ACCOUNT"))
         if account_col is None

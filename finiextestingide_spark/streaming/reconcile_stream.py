@@ -25,10 +25,14 @@ Two exactness decisions:
   revision also gives an audit trail of every reclassification
   (ORPHAN -> UNDER_EXECUTED -> MATCHED as the order and its fills land).
 
-Scale posture: state is one tiny row per order key, sharded by the shuffle
-on the key; no per-batch scans of the whole book, no driver participation.
-A 100 TB lake's order flow shards across executors exactly like the batch
-join's shuffle would.
+Scale posture: keys hash into a fixed ``_STATE_BUCKETS`` buckets and each
+bucket keeps ONE pickled book of its keys' pairing state, so the stateful
+boundary pays Python's per-group framing cost once per bucket, not once per
+key; no driver participation. The bucket count is a module constant, never
+derived from the session: Spark freezes the state partitioning in the
+checkpoint, and a count that followed ``spark.sql.shuffle.partitions`` would
+re-hash keys into other buckets on a restart under a different partition
+count, silently starting their books over.
 
 Cold-start recovery (round-9 item 2; reference: Cold-Start Recovery #355,
 python/framework/persistence/algo_state_store.py:1-22 reconstructs broker/
@@ -64,7 +68,6 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     BinaryType,
     DoubleType,
-    IntegerType,
     LongType,
     StringType,
     StructField,
@@ -146,15 +149,66 @@ def _classify(has_order, exp, executed, n_exec, tolerance):
     return status, exp, x
 
 
-_STATE_SCHEMA = StructType(
-    [
-        StructField("has_order", IntegerType()),
-        StructField("expected", DoubleType()),
-        StructField("executed", StringType()),  # exact Decimal as text
-        StructField("n_exec", LongType()),
-        StructField("revision", LongType()),
-    ]
-)
+#: Hash buckets of the pairing state: one pickled book per bucket. A
+#: constant, because the checkpoint freezes which bucket holds a key (see
+#: the module docstring); 64 buckets ran the reconcile gates as fast as 8x
+#: the shuffle partitions did at both 4 and 32 partitions.
+_STATE_BUCKETS = 64
+
+_BOOK_SCHEMA = StructType([StructField("book", BinaryType())])
+
+
+def _state_bucket(key_col: str):
+    """The bucket a key's pairing state lives in."""
+    return F.pmod(F.xxhash64(key_col), F.lit(_STATE_BUCKETS))
+
+
+def _bucket_step(pdfs, state: GroupState, *, state_ttl_ms, tolerance, columns):
+    """One bucket's micro-batch, the stream's whole stateful step. The
+    state is one pickled book ``{key: (has_order, expected, executed_text,
+    n_exec, revision, last_event_ms)}``; every key with events folds them
+    in arrival order through ``_fold_payloads`` and emits one revision row.
+
+    TTL (``state_ttl_ms > 0``): a touched bucket first drops every key idle
+    for at least the TTL, so a late fill re-creates its key as a fresh
+    ORPHAN; a new key seeds its revision from the processing-time clock so
+    revisions stay monotone across expiry. Every touched bucket re-arms a
+    timeout of the TTL, so a bucket that times out has had no event for the
+    TTL, and neither has any key in it: its whole book goes."""
+    if state.hasTimedOut:
+        state.remove()
+        return
+    book = pickle.loads(state.get[0]) if state.exists else {}
+    now = state.getCurrentProcessingTimeMs()
+    if state_ttl_ms > 0:
+        for k in [k for k, v in book.items() if now - v[5] >= state_ttl_ms]:
+            del book[k]
+    events: dict = {}
+    for pdf in pdfs:
+        for k, p in zip(pdf["__key"].tolist(), pdf["__ev"].tolist()):
+            events.setdefault(k, []).append(p)
+    # one preallocated object frame per bucket (r15, guide §4.2: the
+    # list-of-tuples constructor pays pandas type inference)
+    rows = np.empty((len(events), 6), dtype=object)
+    for i, (k, payloads) in enumerate(events.items()):
+        prev = book.get(k)
+        if prev is None:
+            has_order, exp, executed, n_exec = 0, None, Decimal(0), 0
+            revision = now if state_ttl_ms > 0 else 0
+        else:
+            has_order, exp, executed_s, n_exec, revision, _ = prev
+            executed = Decimal(executed_s)
+        has_order, exp, executed, n_exec = _fold_payloads(
+            has_order, exp, executed, n_exec, payloads
+        )
+        revision += 1
+        book[k] = (has_order, exp, str(executed), n_exec, revision, now)
+        status, e_out, x_out = _classify(has_order, exp, executed, n_exec, tolerance)
+        rows[i] = (k, e_out, x_out, n_exec, status, revision)
+    state.update((pickle.dumps(book, protocol=4),))
+    if state_ttl_ms > 0:
+        state.setTimeoutDuration(state_ttl_ms)
+    yield pd.DataFrame(rows, columns=columns)
 
 
 def bootstrap_state(
@@ -240,7 +294,6 @@ def reconcile_stream(
     weekend_aware: bool = True,
     restore_now=None,
     on_stale: str = "warn",
-    state_buckets: int | None = None,
 ) -> DataFrame:
     """orders(order_key, expected_amount) STREAM x executions(order_key,
     qty) STREAM -> revision stream (order_key, expected_amount,
@@ -255,22 +308,36 @@ def reconcile_stream(
     feeds drain. ``qty`` may be a decimal column — exactness of the
     accumulated total is preserved end-to-end.
 
+    State lives in ``_STATE_BUCKETS`` hash buckets of the key, one pickled
+    book per bucket (``_bucket_step``), so the stateful boundary pays
+    Python's per-group framing cost per bucket instead of per key. The
+    fold, the per-key revision counters and the emitted rows are those of
+    a per-key layout.
+
     ``state_ttl_ms > 0`` arms per-key state expiry (the 100 TB posture:
     order flow is unbounded, so a months-lived stream must not hold every
-    key it ever saw): a key idle for the TTL drops its pairing state —
-    its latest revision already carries the verdict. A fill arriving
-    AFTER expiry re-creates the key as a fresh ORPHAN revision (visible,
-    never silently merged), which is exactly the honest signal for a fill
-    later than the retention horizon. Revisions stay MONOTONE across
-    expiry: with the TTL armed, a freshly-created key seeds its revision
-    counter from the batch's processing-time clock (globally increasing
-    across micro-batches), so the post-expiry ORPHAN outranks every
-    pre-expiry revision and ``latest_revisions`` surfaces it as the
-    current verdict (ADVICE r8: a counter restarted at 1 would lose to
-    the stale pre-expiry row in the max-revision view). Default 0 = keep
-    state forever (bounded audits, the gate's availableNow drives) with
-    plain deterministic 1,2,3... counters — state never expires there, so
-    plain counters are already monotone and the gate hash is unaffected.
+    key it ever saw): a key idle for the TTL drops out of its bucket's
+    book when the bucket is next touched, and a bucket idle for the TTL
+    drops its whole book — the key's latest revision already carries the
+    verdict. A fill arriving AFTER expiry re-creates the key as a fresh
+    ORPHAN revision (visible, never silently merged), which is exactly the
+    honest signal for a fill later than the retention horizon. Revisions
+    stay MONOTONE across expiry: with the TTL armed, a freshly-created key
+    seeds its revision counter from the batch's processing-time clock
+    (globally increasing across micro-batches), so the post-expiry ORPHAN
+    outranks every pre-expiry revision and ``latest_revisions`` surfaces
+    it as the current verdict (ADVICE r8: a counter restarted at 1 would
+    lose to the stale pre-expiry row in the max-revision view). Default 0
+    = keep state forever (bounded audits, the gate's availableNow drives)
+    with plain deterministic 1,2,3... counters — state never expires
+    there, so plain counters are already monotone and the gate hash is
+    unaffected.
+
+    Restart contract: a restart from a checkpoint finds every key in the
+    bucket that wrote it, under any ``spark.sql.shuffle.partitions``.
+    Checkpoints written by earlier versions of this operator (per-key TTL
+    state, or a bucket count other than ``_STATE_BUCKETS``) do not carry
+    over: restart them cold, or re-seed the book through ``bootstrap=``.
 
     ``bootstrap`` (with ``bootstrap_dir``) arms cold-start recovery: a
     ``bootstrap_state`` snapshot (or any DataFrame with its schema) is
@@ -301,16 +368,7 @@ def reconcile_stream(
     the check reproducible. ``on_stale="warn"`` logs the advisory and
     proceeds (the reference's warn policy); ``"error"`` raises before any
     state is seeded (the discard policy — the caller decides whether to
-    re-derive a fresh snapshot).
-
-    ``state_buckets`` (r16, state_ttl_ms == 0 only): the per-key pairing
-    state is sharded into this many hash buckets, one pickled book per
-    bucket, so the stateful boundary pays Python's per-GROUP framing cost
-    per BUCKET instead of per key (the reconcile family's measured floor;
-    see the bucketed-path comment). Default: 8x the session's shuffle
-    partitions. Per-key fold, revision counters and emitted rows are
-    identical to the per-key layout; TTL-armed streams (state_ttl_ms > 0)
-    always use per-key state, where expiry semantics live."""
+    re-derive a fresh snapshot)."""
     if (bootstrap is None) != (bootstrap_dir is None):
         raise ValueError("bootstrap and bootstrap_dir must be passed together")
     if on_stale not in ("warn", "error"):
@@ -340,8 +398,8 @@ def reconcile_stream(
 
     # Packed wire (r15, guide §4.1): ONE payload string per event instead
     # of five typed columns — applyInPandasWithState slices and converts
-    # every wire column per KEY on the Python side, so column count is a
-    # direct per-key cost (measured ~25%% of the stateful drive). First
+    # every wire column per group on the Python side, so column count is a
+    # direct per-group cost (measured ~25%% of the stateful drive). First
     # char = kind: 0 execution, 1 order, 2 snapshot seed. Doubles travel
     # as Java's shortest round-trip repr (float() restores the identical
     # IEEE754 bits); quantities as the same exact decimal text the
@@ -394,158 +452,31 @@ def reconcile_stream(
         )
         src = src.unionByName(seed_src)
 
-    out_cols = [f.name for f in out_schema.fields]
+    # r16 BUCKETED STATE (guide §4.1 taken to the operator level): the
+    # per-KEY Python invocation cost of applyInPandasWithState (~1-2.4
+    # ms/key/batch of group framing on both sides of the Arrow boundary —
+    # measured r15, and nothing inside the API shaves it) is the reconcile
+    # family's floor. Grouping by a HASH BUCKET of the key instead turns
+    # that per-key framing into a per-bucket cost: one Python invocation
+    # folds every key in the bucket with plain dict operations and emits
+    # all of the bucket's revision rows as ONE frame (``_bucket_step``).
+    # Trade-off: a touched bucket rewrites its whole book each batch; the
+    # TTL keeps long-lived books bounded.
+    columns = [f.name for f in out_schema.fields]
 
-    if state_ttl_ms == 0:
-        # r16 BUCKETED STATE (guide §4.1 taken to the operator level): the
-        # per-KEY Python invocation cost of applyInPandasWithState (~1-2.4
-        # ms/key/batch of group framing on both sides of the Arrow
-        # boundary — measured r15, and nothing inside the API shaves it) is
-        # the reconcile family's floor. Grouping by a HASH BUCKET of the
-        # key instead of the key itself turns that per-key framing into a
-        # per-bucket cost: one Python invocation folds every key in the
-        # bucket with plain dict operations (~1 us/event) and emits all of
-        # the bucket's revision rows as ONE frame. Per-key semantics are
-        # unchanged — same fold (`_fold_payloads` inlined per key, same
-        # event order within a key), same revision counter per key, same
-        # one-revision-per-key-per-batch emission — only the state LAYOUT
-        # differs: one pickled {key: (has, exp, exec_text, n, rev)} book
-        # per bucket rather than one typed row per key. Trade-off: a
-        # touched bucket rewrites its whole book each batch, so this path
-        # is gated to state_ttl_ms == 0 (bounded books by design: the
-        # open-order restart seed, availableNow audits); TTL streams keep
-        # per-key state below, where expiry is per-key and books stay
-        # bounded by expiry rather than by the caller.
-        #
-        # Bucket count is scale-adaptive, never a local constant: default
-        # 8x the session's shuffle partitions (so each state partition
-        # holds ~8 buckets — enough for even task sizes — and blobs stay
-        # small); callers with very large books pass ``state_buckets``.
-        n_buckets = state_buckets
-        if n_buckets is None:
-            n_buckets = 8 * int(
-                orders.sparkSession.conf.get("spark.sql.shuffle.partitions")
-            )
-        srcb = src.select(
-            F.pmod(F.xxhash64("__key"), F.lit(n_buckets)).alias("__bucket"),
-            "__key",
-            "__ev",
+    def run(_bucket: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState):
+        return _bucket_step(
+            pdfs, state, state_ttl_ms=state_ttl_ms, tolerance=tolerance,
+            columns=columns,
         )
-        blob_schema = StructType([StructField("book", BinaryType())])
-
-        def run_bucket(key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState):
-            book = pickle.loads(state.get[0]) if state.exists else {}
-            touched: dict = {}
-            for pdf in pdfs:
-                if not len(pdf):
-                    continue
-                for k, p in zip(pdf["__key"].tolist(), pdf["__ev"].tolist()):
-                    st = touched.get(k)
-                    if st is None:
-                        prev = book.get(k)
-                        if prev is None:
-                            st = [0, None, Decimal(0), 0, 0]
-                        else:
-                            st = [prev[0], prev[1], Decimal(prev[2]), prev[3], prev[4]]
-                        touched[k] = st
-                    c = p[0]
-                    if c == "1":  # order (same fold as _fold_payloads)
-                        st[0] = 1
-                        st[1] = float(p[1:])
-                    elif c == "0":  # execution
-                        st[2] += Decimal(p[1:])
-                        st[3] += 1
-                    else:  # snapshot seed: commutative merge
-                        _, e_s, q_s, n_s, h_s = p.split("|")
-                        st[0] = max(st[0], int(h_s))
-                        if st[1] is None and e_s:
-                            st[1] = float(e_s)
-                        st[2] += Decimal(q_s)
-                        st[3] += int(n_s)
-            if not touched:
-                return
-            rows = np.empty((len(touched), 6), dtype=object)
-            for i, (k, st) in enumerate(touched.items()):
-                st[4] += 1
-                book[k] = (st[0], st[1], str(st[2]), st[3], st[4])
-                status, e_out, x_out = _classify(
-                    st[0], st[1], st[2], st[3], tolerance
-                )
-                rows[i, 0] = k
-                rows[i, 1] = e_out
-                rows[i, 2] = x_out
-                rows[i, 3] = st[3]
-                rows[i, 4] = status
-                rows[i, 5] = st[4]
-            state.update((pickle.dumps(book, protocol=4),))
-            yield pd.DataFrame(rows, columns=out_cols)
-
-        return srcb.groupBy("__bucket").applyInPandasWithState(
-            run_bucket,
-            outputStructType=out_schema,
-            stateStructType=blob_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-
-    def run(key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        (k,) = key
-        if state.hasTimedOut:
-            # TTL expiry: the latest emitted revision stands as the final
-            # verdict; dropping state bounds a long-lived stream
-            state.remove()
-            return
-        if state.exists:
-            has_order, exp, executed_s, n_exec, revision = state.get
-            executed = Decimal(executed_s)
-        else:
-            has_order, exp, executed, n_exec, revision = 0, None, Decimal(0), 0, 0
-            if state_ttl_ms > 0:
-                # TTL armed: this key may be a post-expiry re-creation whose
-                # pre-expiry counter is unknowable (state was dropped). Seed
-                # the counter from the batch's processing-time clock —
-                # globally monotone across micro-batches — so revisions for
-                # one key never go backwards across an expiry and the
-                # max-revision view always surfaces the newest verdict.
-                # (TTL-armed runs are already wall-clock dependent via the
-                # processing-time timeout; the deterministic ttl=0 path is
-                # untouched.)
-                revision = state.getCurrentProcessingTimeMs()
-        changed = False
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            changed = True
-            has_order, exp, executed, n_exec = _fold_payloads(
-                has_order, exp, executed, n_exec, pdf["__ev"]
-            )
-        if not changed:
-            return
-        revision += 1
-        state.update((has_order, exp, str(executed), n_exec, revision))
-        if state_ttl_ms > 0:
-            state.setTimeoutDuration(state_ttl_ms)
-        status, e_out, x_out = _classify(has_order, exp, executed, n_exec, tolerance)
-        # r15 (guide §4.2): this yield runs once per KEY; building the
-        # 1-row frame from a preallocated object ndarray measures ~100 us
-        # vs ~380 us for the list-of-tuples constructor (pandas type
-        # inference). Columns stay object-dtype either way — the Arrow
-        # conversion downstream is unchanged (None -> null, same values).
-        row = np.empty((1, 6), dtype=object)
-        row[0, 0] = k
-        row[0, 1] = e_out
-        row[0, 2] = x_out
-        row[0, 3] = n_exec
-        row[0, 4] = status
-        row[0, 5] = revision
-        yield pd.DataFrame(row, columns=out_cols)
 
     return (
-        src.groupBy("__key")
+        src.select(_state_bucket("__key").alias("__bucket"), "__key", "__ev")
+        .groupBy("__bucket")
         .applyInPandasWithState(
             run,
             outputStructType=out_schema,
-            stateStructType=_STATE_SCHEMA,
+            stateStructType=_BOOK_SCHEMA,
             outputMode="append",
             timeoutConf=(
                 GroupStateTimeout.ProcessingTimeTimeout

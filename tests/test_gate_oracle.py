@@ -23,13 +23,17 @@ QUERIES = all_queries()
 #: ~19 s together at sf0.001 on local[4]; the order-2 and order-3
 #: modified-KN gates, whose hand-written oracles check the order-N
 #: scorer's level loop independently: ~+15 s (this module's default run
-#: went 33.0 -> 54.6 s on 4 vCPUs, 6.5 s of it the FutureWarning test)
+#: went 33.0 -> 54.6 s on 4 vCPUs, 6.5 s of it the FutureWarning test);
+#: the bucketed reconcile stream and its bootstrap-seed path: 2.8 s and
+#: 6.7 s at sf0.001 on local[4]
 DEFAULT_ORACLE_SLICE = (
     "streaming_live_replay",
     "streaming_live_limit",
     "streaming_live_signal",
     "modified_kn_perplexity",
     "trigram_mkn_perplexity",
+    "streaming_reconciliation",
+    "streaming_reconcile_tail",
 )
 
 

@@ -235,8 +235,6 @@ def test_signal_follow_bootstrap_parity(spark, tmp_path):
     history + signal/tick tails equals the uninterrupted run — including
     entry_sig_ts/entry_sig_score on tail trades whose DECISION signal
     arrived in history."""
-    from finiextestingide_spark.streaming.live_replay import _merge_signals
-
     sym = "EURUSD"
     params = {
         "strategy": "signal_follow",

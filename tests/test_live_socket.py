@@ -2128,12 +2128,13 @@ def test_signal_follow_latency_parity(spark, sf_dir, tmp_path):
 
 
 def test_generic_live_signals_with_collected_msc(spark, sf_dir, tmp_path):
-    """Regression (round-8 advice): ``_merge_signals`` left collected_msc
-    NULL on signal rows when the tick stream carried the column, so the
-    session drive's int64 cast raised IntCastingNaNError on the
-    documented optional-collected_msc wire contract. Signal rows now
-    stamp collected_msc from sig_ts (mirroring batch merge_signal_rows)
-    and the live run must match the batch trades exactly."""
+    """Regression (round-8 advice): the live signal merge left
+    collected_msc NULL on signal rows when the tick stream carried the
+    column, so the session drive's int64 cast raised IntCastingNaNError on
+    the documented optional-collected_msc wire contract. Signal rows now
+    stamp collected_msc from sig_ts (the live path runs the batch
+    merge_signal_rows) and the live run must match the batch trades
+    exactly."""
     from finiextestingide_spark.operators.replay import run_backtest, trades_table
     from finiextestingide_spark.streaming.live_replay import live_backtest
 

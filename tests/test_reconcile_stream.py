@@ -828,15 +828,25 @@ def test_bootstrap_staleness_policy(spark, tmp_path):
 
 
 def test_bucketed_state_multibatch_parity(spark, tmp_path):
-    """r16 bucketed-state layout (state_ttl_ms == 0 groups by a hash BUCKET
-    of the key, one pickled book per bucket): per-key semantics must be
-    unchanged — one revision per key per batch-with-events, monotone
-    counters starting at 1, and finals equal to the batch reconcile — even
-    when many keys share a bucket. state_buckets=2 forces heavy key
-    collisions; two availableNow drives against one checkpoint force a
-    deterministic 2-batch slicing so cross-batch state (the pickled book)
-    is exercised, not just the single-batch fold."""
+    """r16 bucketed-state layout (the stream groups by a hash BUCKET of the
+    key, one pickled book per bucket): per-key semantics must be unchanged
+    — one revision per key per batch-with-events, monotone counters
+    starting at 1, and finals equal to the batch reconcile — even when
+    keys share a bucket (asserted below: keys 3 and 8 do under the
+    constant bucket count); two availableNow drives against one
+    checkpoint force a deterministic 2-batch slicing so cross-batch state
+    (the pickled book) is exercised, not just the single-batch fold."""
     from finiextestingide_spark.operators.reconcile import reconcile_orders
+    from finiextestingide_spark.streaming.reconcile_stream import _state_bucket
+
+    keys = sorted(set(ORDERS) | set(FILLS))
+    buckets = [
+        r[0]
+        for r in spark.createDataFrame([(k,) for k in keys], "order_id long")
+        .select(_state_bucket("order_id"))
+        .collect()
+    ]
+    assert len(set(buckets)) < len(keys), buckets  # some keys share a book
 
     in_dir = tmp_path / "feed"
     ckpt = str(tmp_path / "ckpt")
@@ -863,7 +873,7 @@ def test_bucketed_state_multibatch_parity(spark, tmp_path):
         e = spark.readStream.schema("order_id long, qty double").parquet(e_dir)
         rev = reconcile_stream(
             o, e, order_key="order_id", expected="expected_amount",
-            qty="qty", tolerance=0.01, state_buckets=2,
+            qty="qty", tolerance=0.01,
         )
         # file sink: the one append sink that supports checkpoint recovery,
         # which the two-drive slicing here depends on (memory does not)
@@ -916,3 +926,176 @@ def test_bucketed_state_multibatch_parity(spark, tmp_path):
         lr = final[k]
         for c in ("expected_amount", "executed_amount", "n_executions", "status"):
             assert lr[c] == br[c], (k, c, lr[c], br[c])
+
+
+def test_restart_under_other_shuffle_partitions_keeps_books(spark, tmp_path):
+    """The bucket a key's state lives in must not depend on the session:
+    Spark freezes the state partitioning in the checkpoint, so a restart
+    under a different ``spark.sql.shuffle.partitions`` (a checkpoint moved
+    to another box) must find every key's book. A bucket count derived
+    from the session re-hashed keys into other buckets there, and their
+    books silently started over (ORPHAN at the tail fill alone)."""
+    from finiextestingide_spark.operators.reconcile import reconcile_orders
+
+    keys = range(1, 41)
+    o_dir, e_dir = str(tmp_path / "orders"), str(tmp_path / "fills")
+    out_dir, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+
+    def drive(partitions, orders_rows, fills_rows):
+        if orders_rows:
+            spark.createDataFrame(
+                orders_rows, "order_id long, expected_amount double"
+            ).write.mode("append").parquet(o_dir)
+        spark.createDataFrame(fills_rows, "order_id long, qty double").write.mode(
+            "append"
+        ).parquet(e_dir)
+        old_parts = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", partitions)
+        try:
+            rev = reconcile_stream(
+                spark.readStream.schema(
+                    "order_id long, expected_amount double"
+                ).parquet(o_dir),
+                spark.readStream.schema("order_id long, qty double").parquet(e_dir),
+                order_key="order_id", tolerance=0.01,
+            )
+            q = (
+                rev.writeStream.format("parquet").option("path", out_dir)
+                .option("checkpointLocation", ckpt).outputMode("append")
+                .trigger(availableNow=True).start()
+            )
+            q.awaitTermination()
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+
+    orders = [(k, 10.0) for k in keys]
+    first, tail = [(k, 4.0) for k in keys], [(k, 6.0) for k in keys]
+    drive("2", orders, first)
+    drive("4", [], tail)
+
+    final = {
+        r["order_id"]: r
+        for r in latest_revisions(spark.read.parquet(out_dir), "order_id").collect()
+    }
+    batch = {
+        r["order_id"]: r
+        for r in reconcile_orders(
+            spark.createDataFrame(orders, "order_id long, expected double"),
+            spark.createDataFrame(first + tail, "order_id long, qty double"),
+            order_key="order_id",
+            expected=F.col("expected"),
+            executed=F.sum("qty"),
+            tolerance=0.01,
+        ).collect()
+    }
+    assert set(final) == set(batch)
+    wrong = {
+        k: (final[k]["status"], final[k]["executed_amount"])
+        for k, br in batch.items()
+        if any(
+            final[k][c] != br[c]
+            for c in ("expected_amount", "executed_amount", "n_executions", "status")
+        )
+    }
+    assert not wrong, wrong
+
+
+# --- the per-bucket step, driven without Spark ------------------------------
+
+import pandas as pd
+from pyspark.sql import Row
+from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from finiextestingide_spark.streaming.reconcile_stream import (
+    _BOOK_SCHEMA,
+    _bucket_step,
+)
+
+_COLS = [
+    "order_id", "expected_amount", "executed_amount", "n_executions",
+    "status", "revision",
+]
+
+
+def _step(state, now_ms, events, *, ttl_ms, timed_out=False):
+    """Run ``_bucket_step`` once the way applyInPandasWithState would: a
+    GroupState carrying the previous call's book (None = no state) at
+    processing time ``now_ms``. Returns the new state and the emitted rows
+    by key."""
+    timeout = (
+        GroupStateTimeout.ProcessingTimeTimeout if ttl_ms
+        else GroupStateTimeout.NoTimeout
+    )
+    gs = GroupState(
+        optionalValue=Row(*state.get) if state is not None and state.exists else None,
+        batchProcessingTimeMs=now_ms,
+        eventTimeWatermarkMs=GroupState.NO_TIMESTAMP,
+        timeoutConf=timeout,
+        hasTimedOut=timed_out,
+        watermarkPresent=False,
+        defined=state is not None and state.exists,
+        updated=False,
+        removed=False,
+        timeoutTimestamp=GroupState.NO_TIMESTAMP,
+        keyAsUnsafe=b"",
+        valueSchema=_BOOK_SCHEMA,
+    )
+    pdf = pd.DataFrame(
+        {"__key": [k for k, _ in events], "__ev": [p for _, p in events]}
+    )
+    frames = list(
+        _bucket_step(
+            iter([pdf]), gs, state_ttl_ms=ttl_ms, tolerance=0.01, columns=_COLS
+        )
+    )
+    rows = {}
+    for f in frames:
+        rows.update({r["order_id"]: r for r in f.to_dict("records")})
+    return gs, rows
+
+
+def test_bucket_step_expires_idle_key_in_busy_bucket():
+    """TTL inside one book: key A idles past the TTL while key B in the
+    same bucket keeps receiving events, so the bucket never times out. A's
+    next fill must drop A's old state (a fresh ORPHAN, n_executions 1) at a
+    revision above every pre-expiry one, and B must carry on untouched."""
+    ttl = 1_000
+    st, r1 = _step(None, 10_000, [(1, "110.0"), (1, "010.0"), (2, "01.5")], ttl_ms=ttl)
+    assert r1[1]["status"] == "MATCHED" and r1[2]["status"] == "ORPHAN"
+    st, r2 = _step(st, 10_600, [(2, "02.5")], ttl_ms=ttl)
+    assert set(r2) == {2}
+    st, r3 = _step(st, 11_000, [(1, "00.5"), (2, "01.0")], ttl_ms=ttl)
+
+    a = r3[1]
+    assert (a["status"], a["n_executions"], a["executed_amount"]) == (
+        "ORPHAN", 1, 0.5,
+    )
+    assert a["expected_amount"] is None
+    assert a["revision"] > r1[1]["revision"]
+    b = r3[2]
+    assert (b["status"], b["n_executions"], b["executed_amount"]) == (
+        "ORPHAN", 3, 5.0,
+    )
+    assert b["revision"] == r2[2]["revision"] + 1 == r1[2]["revision"] + 2
+    # every touched bucket re-arms its timeout for the TTL
+    assert st._timeout_timestamp == 11_000 + ttl
+
+
+def test_bucket_step_timed_out_bucket_clears_state():
+    """A bucket that times out has seen no event for the TTL, so neither
+    has any key in it: the whole book goes and nothing is emitted."""
+    st, _ = _step(None, 10_000, [(1, "110.0"), (2, "03.0")], ttl_ms=1_000)
+    assert st.exists
+    st, rows = _step(st, 11_500, [], ttl_ms=1_000, timed_out=True)
+    assert not st.exists and not rows
+
+
+def test_bucket_step_without_ttl_never_expires():
+    """``state_ttl_ms == 0``: plain 1,2,3... revision counters and no
+    expiry however long a key idles."""
+    st, r1 = _step(None, 10_000, [(1, "110.0"), (1, "04.0")], ttl_ms=0)
+    assert r1[1]["revision"] == 1
+    st, r2 = _step(st, 10_000 + 10**9, [(1, "06.0")], ttl_ms=0)
+    assert (r2[1]["status"], r2[1]["n_executions"], r2[1]["revision"]) == (
+        "MATCHED", 2, 2,
+    )

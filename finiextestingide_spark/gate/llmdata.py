@@ -133,15 +133,16 @@ FROM r JOIN k USING (content_hash)
 
 def streaming_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.dedup_stream import streaming_exact_dedup
-    from ..streaming.incremental_bars import drain_to_memory
+    from ..streaming.bars_stream import run_to_memory
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
     # glob keeps the parent dir as the stream's basePath (single-file quirk)
     docs = spark.readStream.schema(schema).parquet(f"{sf_dir}/documents.parque*")
-    out = streaming_exact_dedup(docs, heartbeat_ms=2_000)
+    heartbeat_ms = 2_000
+    out = streaming_exact_dedup(docs, heartbeat_ms=heartbeat_ms)
     name = "gate_streaming_dedup_exact"
-    drain_to_memory(out, name, settle_secs=4.0, await_state_drain=True)
+    run_to_memory(out, name, timeout_ms=heartbeat_ms)
     return spark.table(name)
 
 
@@ -168,7 +169,7 @@ def merged_dedup_view_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         merged_dedup_view,
         streaming_exact_dedup,
     )
-    from ..streaming.incremental_bars import drain_to_memory
+    from ..streaming.bars_stream import run_to_memory
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     hist = _docs(spark, sf_dir).where(F.col("doc_id") % 10 != 3)
@@ -180,9 +181,10 @@ def merged_dedup_view_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(f"{sf_dir}/documents.parque*")
         .where(F.col("doc_id") % 10 == 3)
     )
-    out = streaming_exact_dedup(tail, heartbeat_ms=2_000)
+    heartbeat_ms = 2_000
+    out = streaming_exact_dedup(tail, heartbeat_ms=heartbeat_ms)
     name = "gate_merged_dedup_view"
-    drain_to_memory(out, name, settle_secs=4.0, await_state_drain=True)
+    run_to_memory(out, name, timeout_ms=heartbeat_ms)
     merged = merged_dedup_view(snap, spark.table(name))
     return merged.select(
         "content_hash",
@@ -381,7 +383,7 @@ def streaming_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-Jaccard verify over the streamed candidates and hash-matching
     the SAME oracle as the batch ``minhash_lsh_pairs`` gate."""
     from ..streaming.dedup_stream import streaming_lsh_candidates
-    from ..streaming.incremental_bars import drain_to_memory
+    from ..streaming.bars_stream import run_to_memory
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
@@ -390,7 +392,7 @@ def streaming_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream, shingle_n=3, num_hashes=_MH_K, bands=_MH_BANDS
     )
     name = "gate_streaming_minhash_lsh"
-    drain_to_memory(pairs, name, settle_secs=4.0, await_state_drain=True)
+    run_to_memory(pairs, name)
     cands = spark.table(name).distinct()
     sh = dd.word_shingles(_docs(spark, sf_dir), 3)
     sets = dd.shingle_set_table(sh)
@@ -421,7 +423,7 @@ def streaming_lsh_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
         merged_lsh_view,
         streaming_lsh_candidates,
     )
-    from ..streaming.incremental_bars import drain_to_memory
+    from ..streaming.bars_stream import run_to_memory
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     hist = _docs(spark, sf_dir).where(F.col("doc_id") % 5 != 2)
@@ -441,7 +443,7 @@ def streaming_lsh_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
             bootstrap_dir=seed_dir,
         )
         name = "gate_streaming_lsh_backfill"
-        drain_to_memory(pairs, name, settle_secs=4.0, await_state_drain=True)
+        run_to_memory(pairs, name)
         hist_sigs = dd.minhash_signatures(dd.shingle_stream(hist, 3), _MH_K)
         merged = merged_lsh_view(
             dd.lsh_candidate_pairs(hist_sigs, _MH_K, _MH_BANDS),
@@ -686,7 +688,7 @@ WHERE rank <= {_IVF_K} AND vec_id <> 0
 
 def streaming_ivf_assign_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.ann_stream import merged_ivf_index, streaming_ivf_assign
-    from ..streaming.incremental_bars import drain_to_memory
+    from ..streaming.bars_stream import run_to_memory
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     emb = _emb(spark, sf_dir)
@@ -710,7 +712,7 @@ def streaming_ivf_assign_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = streaming_ivf_assign(tail, centroid_rows).select("vec_id", "centroid_id")
     name = "gate_streaming_ivf_assign"
-    drain_to_memory(out, name, settle_secs=2.0)
+    run_to_memory(out, name)
     return merged_ivf_index(hist, spark.table(name))
 
 
@@ -4002,7 +4004,7 @@ def ivfpq_residual_lake_refined_10(spark: SparkSession, sf_dir: str) -> DataFram
 
 def streaming_pq_codes_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.ann_stream import merged_pq_codes, streaming_pq_encode
-    from ..streaming.incremental_bars import drain_to_memory
+    from ..streaming.bars_stream import run_to_memory
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     books = _pq_codebooks(spark, sf_dir)
@@ -4017,7 +4019,7 @@ def streaming_pq_codes_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = streaming_pq_encode(tail, books)
     name = "gate_streaming_pq_codes"
-    drain_to_memory(out, name, settle_secs=2.0)
+    run_to_memory(out, name)
     code_cols = [f"pq{j}" for j in range(_PQ_M)]
     merged = merged_pq_codes(
         hist.select("vec_id", *code_cols),
@@ -4457,7 +4459,7 @@ NGRAM_MKN_PERPLEXITY_SQL = _ngram_mkn_sql(_NGRAM_ORDER, _NGRAM_MIN_WC)
 
 
 def streaming_gopher_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.incremental_bars import drain_to_memory
+    from ..streaming.bars_stream import run_to_memory
     from ..streaming.quality_stream import (
         merged_quality_flags,
         streaming_quality_flags,
@@ -4474,7 +4476,7 @@ def streaming_gopher_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     out = streaming_quality_flags(tail)
     name = "gate_streaming_gopher"
-    drain_to_memory(out, name, settle_secs=2.0)
+    run_to_memory(out, name)
     return merged_quality_flags(hist, spark.table(name))
 
 
@@ -4489,7 +4491,7 @@ def streaming_gopher_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame
 
 def streaming_curated_corpus_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import curation as cu
-    from ..streaming.incremental_bars import drain_to_memory
+    from ..streaming.bars_stream import run_to_memory
     from ..streaming.quality_stream import (
         merged_quality_flags,
         streaming_quality_flags,
@@ -4516,7 +4518,7 @@ def streaming_curated_corpus_gate(spark: SparkSession, sf_dir: str) -> DataFrame
         tail, min_words=_CUR_MIN_WORDS, min_stop_hits=_CUR_MIN_STOPS
     )
     name = "gate_streaming_curated"
-    drain_to_memory(flags, name, settle_secs=2.0)
+    run_to_memory(flags, name)
     merged = merged_quality_flags(
         hist, spark.table(name).select("doc_id", "keep")
     )

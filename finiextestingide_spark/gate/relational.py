@@ -609,6 +609,7 @@ def streaming_reconcile_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     times the designated shapes instead: ``streaming_reconcile_restart``
     (bounded open-book seed) and ``merged_reconcile_view`` (ledger-wide
     sink-merge)."""
+    import shutil
     import tempfile
 
     from ..streaming.bars_stream import run_to_memory
@@ -653,13 +654,18 @@ def streaming_reconcile_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("l_orderkey") % 10 == 3)
         .select(F.col("l_orderkey").alias("o_orderkey"), qty_expr.alias("qty"))
     )
-    rev = reconcile_stream(
-        orders_tail, execs_tail, order_key="o_orderkey",
-        expected="expected_amount", qty="qty", tolerance=0.01,
-        bootstrap=snap, bootstrap_dir=tempfile.mkdtemp(prefix="recon_tail_"),
-    )
-    name = "gate_streaming_reconcile_tail"
-    run_to_memory(rev, name)
+    ledger = tempfile.mkdtemp(prefix="recon_tail_")
+    try:
+        rev = reconcile_stream(
+            orders_tail, execs_tail, order_key="o_orderkey",
+            expected="expected_amount", qty="qty", tolerance=0.01,
+            bootstrap=snap, bootstrap_dir=ledger,
+        )
+        name = "gate_streaming_reconcile_tail"
+        run_to_memory(rev, name)
+    finally:
+        # the drained memory table no longer reads the seed ledger
+        shutil.rmtree(ledger, ignore_errors=True)
     out = latest_revisions(spark.table(name), "o_orderkey")
     return out.select(
         "o_orderkey",
@@ -691,6 +697,7 @@ def streaming_reconcile_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     is therefore history+tail == the full ledger for that key, so the
     oracle is the batch classification restricted to the open-book
     slice."""
+    import shutil
     import tempfile
 
     from ..streaming.bars_stream import run_to_memory
@@ -737,13 +744,18 @@ def streaming_reconcile_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where((F.col("l_orderkey") % 29 == 0) & (F.col("l_linenumber") % 2 == 1))
         .select(F.col("l_orderkey").alias("o_orderkey"), qty_expr.alias("qty"))
     )
-    rev = reconcile_stream(
-        orders_tail, execs_tail, order_key="o_orderkey",
-        expected="expected_amount", qty="qty", tolerance=0.01,
-        bootstrap=open_book, bootstrap_dir=tempfile.mkdtemp(prefix="recon_rs_"),
-    )
-    name = "gate_streaming_reconcile_restart"
-    run_to_memory(rev, name)
+    ledger = tempfile.mkdtemp(prefix="recon_rs_")
+    try:
+        rev = reconcile_stream(
+            orders_tail, execs_tail, order_key="o_orderkey",
+            expected="expected_amount", qty="qty", tolerance=0.01,
+            bootstrap=open_book, bootstrap_dir=ledger,
+        )
+        name = "gate_streaming_reconcile_restart"
+        run_to_memory(rev, name)
+    finally:
+        # the drained memory table no longer reads the seed ledger
+        shutil.rmtree(ledger, ignore_errors=True)
     out = latest_revisions(spark.table(name), "o_orderkey")
     return out.select(
         "o_orderkey",

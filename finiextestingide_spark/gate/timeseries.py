@@ -153,8 +153,8 @@ def streaming_incremental_bars_1h(spark: SparkSession, sf_dir: str) -> DataFrame
     output. Oracle: the direct tick->H1 SQL restricted to each symbol's
     non-final buckets, with the volume fold order-matched (list_reduce over
     (ts, event_id)-ordered values == the renderer's running float sum)."""
-    from ..streaming.incremental_bars import drain_to_memory, incremental_bars
-    from ..streaming.bars_stream import read_tick_stream
+    from ..streaming.bars_stream import read_tick_stream, run_to_memory
+    from ..streaming.incremental_bars import incremental_bars
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     set_nanos_as_long(spark)
@@ -175,7 +175,7 @@ def streaming_incremental_bars_1h(spark: SparkSession, sf_dir: str) -> DataFrame
     name = "gate_streaming_incremental_bars_1h"
     # heartbeat far beyond the drain window: only close-on-next-bucket bars
     bars = incremental_bars(ticks, 3_600_000, heartbeat_ms=3_600_000_000)
-    drain_to_memory(bars, name, settle_secs=4.0)
+    run_to_memory(bars, name)
     out = spark.table(name)
     return out.select(
         "symbol",
@@ -1331,6 +1331,7 @@ def streaming_live_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     trade records are hash-identical to a third engine's model of the
     batch semantics: the reference's dual-pipeline parity contract
     (tests/parity/test_trade_records_parity.py), driver-checked."""
+    from ..streaming.bars_stream import run_to_memory
     from ..streaming.live_replay import live_backtest
 
     ticks = _live_gate_ticks(spark, sf_dir)
@@ -1343,15 +1344,7 @@ def streaming_live_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         "equity_sample_every": "0",
     }
     name = "gate_streaming_live_replay"
-    q = (
-        live_backtest(ticks, params)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_to_memory(live_backtest(ticks, params), name)
     sid = F.create_map(
         *[x for i, s in enumerate(_RSO_SYMBOLS) for x in (F.lit(s), F.lit(i + 1))]
     )[F.col("symbol")]
@@ -1400,6 +1393,7 @@ def streaming_live_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
     (trade_simulator.py:610-686 fill-at-limit;
     abstract_trade_executor._check_sl_tp_triggers:403-459 level fills).
     Hash-checked against an independent DuckDB reconstruction."""
+    from ..streaming.bars_stream import run_to_memory
     from ..streaming.live_replay import live_backtest
 
     ticks = _live_gate_ticks(spark, sf_dir)
@@ -1413,15 +1407,7 @@ def streaming_live_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "equity_sample_every": "0",
     }
     name = "gate_streaming_live_limit"
-    q = (
-        live_backtest(ticks, params)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_to_memory(live_backtest(ticks, params), name)
     sid = F.create_map(
         *[x for i, s in enumerate(_RSO_SYMBOLS) for x in (F.lit(s), F.lit(i + 1))]
     )[F.col("symbol")]
@@ -1537,7 +1523,7 @@ def streaming_live_signal(spark: SparkSession, sf_dir: str) -> DataFrame:
     decision series + as-of resolution + flip/trade enumeration — the
     reference's llm_sentiment worker runs inside the live loop the same
     way (core/llm_sentiment_worker.py:73-107)."""
-    from ..streaming.bars_stream import read_tick_stream
+    from ..streaming.bars_stream import read_tick_stream, run_to_memory
     from ..streaming.live_replay import live_backtest
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
@@ -1561,15 +1547,7 @@ def streaming_live_signal(spark: SparkSession, sf_dir: str) -> DataFrame:
         "equity_sample_every": "0",
     }
     name = "gate_streaming_live_signal"
-    q = (
-        live_backtest(ticks, params, signals=signals)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_to_memory(live_backtest(ticks, params, signals=signals), name)
     sid = F.create_map(
         *[x for i, s in enumerate(_RSO_SYMBOLS) for x in (F.lit(s), F.lit(i + 1))]
     )[F.col("symbol")]

@@ -16,11 +16,17 @@ shared_data_preparator.py:686-692, so ``delay='0 seconds'`` matches it).
 
 State bounds: the watermark is the TTL — Spark drops window state once the
 watermark passes, the reference's deque(maxlen=1000) analogue
-(bar_renderer.py:55-58)."""
+(bar_renderer.py:55-58).
+
+``run_to_memory`` is the one drain every gate and test uses to run a stream
+into a memory table: it stops on the query's own progress records (see
+``stream_drained``), never on a wall-clock settle."""
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+import time
+from collections.abc import Mapping, Sequence
+from datetime import datetime
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -92,19 +98,142 @@ def stream_ohlcv_bars(
     )
 
 
+# seconds between looks at a running drain's progress records
+_POLL_SECS = 0.1
+
+
+def _start_ms(progress: Mapping) -> int:
+    """A progress record's trigger start, epoch milliseconds."""
+    ts = datetime.fromisoformat(progress["timestamp"].replace("Z", "+00:00"))
+    return int(ts.timestamp() * 1000)
+
+
+def _moved(progress: Mapping) -> bool:
+    return any(
+        s["startOffset"] != s["endOffset"] for s in progress.get("sources") or ()
+    )
+
+
+def stream_drained(
+    progress: Sequence[Mapping], timeout_ms: int | None = None
+) -> bool:
+    """The drain's stop rule over a query's completed-batch progress records
+    (``StreamingQuery.recentProgress`` entries, in any order).
+
+    True once a batch that moved no source offset (``startOffset ==
+    endOffset`` on every source) completed after the last batch that moved
+    one: under ``availableNow`` such a batch is only built once every source
+    has reached its end offset, so every data batch's output is in the sink.
+
+    ``timeout_ms`` is the stream's processing-time timeout. A timer armed in a
+    data batch expires no later than that batch's start + its
+    ``triggerExecution`` + ``timeout_ms``; a batch that started after the
+    latest such deadline has fired every key's timeout, so it must also have
+    completed."""
+    data = [p for p in progress if _moved(p)]
+    if not data:
+        return False
+    last = max(p["batchId"] for p in data)
+    after = [p for p in progress if p["batchId"] > last]
+    if timeout_ms is None:
+        return bool(after)
+    deadline = max(
+        _start_ms(p) + p["durationMs"]["triggerExecution"] + timeout_ms
+        for p in data
+    )
+    return any(_start_ms(p) > deadline for p in after)
+
+
 def run_to_memory(
-    bars: DataFrame, query_name: str, *, output_mode: str = "append"
+    df: DataFrame,
+    query_name: str,
+    *,
+    output_mode: str = "append",
+    timeout_ms: int | None = None,
 ) -> None:
-    """Drain all available input into an in-memory table (tests / local
-    inspection). Blocks until the availableNow trigger finishes."""
+    """Drain all available input into an in-memory table (gates, tests,
+    local inspection), then return.
+
+    Runs the stream under ``availableNow``. A stream without a
+    processing-time timeout terminates by itself once its input is consumed.
+    One with such a timeout never does (every pending timer schedules
+    another, empty, batch), so the drain stops it once ``stream_drained``
+    holds over its progress records. Pass the stream's own ``timeout_ms``
+    when it emits on timeout, so the drain also waits for those emissions.
+    A failed query raises here."""
     q = (
-        bars.writeStream.format("memory")
+        df.writeStream.format("memory")
         .queryName(query_name)
         .outputMode(output_mode)
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination()
+    seen: dict = {}
+    while not q.awaitTermination(_POLL_SECS):
+        # the progress buffer is bounded; keep every record seen so far
+        for p in q.recentProgress:
+            seen[(p["batchId"], p["timestamp"])] = p
+        if stream_drained(list(seen.values()), timeout_ms):
+            stop_query_quietly(q, df.sparkSession)
+            return
+
+
+def stop_query_quietly(q, spark: SparkSession) -> None:
+    """Stop a drained stateful stream without state-store abort noise.
+    ``q.stop()`` interrupts whatever micro-batch is mid-flight; under
+    ProcessingTimeTimeout, availableNow schedules timeout-check batches back
+    to back, so the interrupt nearly always lands mid-batch (waiting for an
+    idle trigger never sees one) and the tasks log 'Aborting commit' /
+    HDFSBackedStateStore ERROR stacks. Harmless: every result was already
+    drained and the abort-retry is the task protocol working. But it buries
+    real errors in every gate log, so during the stop the teardown-noisy log
+    categories are lowered to OFF and restored after. The window where they
+    are dark is one where the only possible messages are the aborts of
+    batches whose output nobody will read."""
+    noisy = (
+        "org.apache.spark.sql.execution.datasources.v2.DataWritingSparkTask",
+        "org.apache.spark.sql.execution.datasources.v2.WriteToDataSourceV2Exec",
+        "org.apache.spark.sql.execution.streaming.state",
+        "org.apache.spark.executor.Executor",
+        "org.apache.spark.scheduler.TaskSetManager",
+        "org.apache.spark.util.Utils",
+        "org.apache.spark.TaskContextImpl",
+        "org.apache.spark.broadcast.TorrentBroadcast",
+    )
+    # prev accumulates category->level as each is silenced; a failure
+    # mid-loop must NOT discard it — whatever was already set to OFF still
+    # gets restored in the finally block
+    prev: dict = {}
+    configurator = None
+    try:
+        jvm = spark.sparkContext._jvm
+        log_manager = jvm.org.apache.logging.log4j.LogManager
+        configurator = jvm.org.apache.logging.log4j.core.config.Configurator
+        off = jvm.org.apache.logging.log4j.Level.OFF
+    except Exception:  # pragma: no cover - alternate log backends
+        configurator = None
+    if configurator is not None:
+        for name in noisy:
+            try:
+                prev[name] = log_manager.getLogger(name).getLevel()
+                configurator.setLevel(name, off)
+            except Exception:  # pragma: no cover - per-category failure
+                prev.pop(name, None)  # this one wasn't silenced; skip it
+    try:
+        q.stop()
+        q.awaitTermination()
+    finally:
+        if prev:
+            # killed tasks log their abort stacks ASYNCHRONOUSLY after
+            # awaitTermination returns (executor threads unwind on their
+            # own schedule) — hold the categories dark briefly so the
+            # restore doesn't race the very noise being suppressed
+            time.sleep(3.0)
+            for name, level in prev.items():
+                try:
+                    configurator.setLevel(name, level)
+                except Exception:  # pragma: no cover
+                    pass
 
 
 def stale_feed_flags(

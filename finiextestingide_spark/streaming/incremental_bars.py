@@ -16,6 +16,12 @@ new data).
 Batch parity: for every bucket except each key's last (which only closes on
 timeout/end), output equals operators.bars.ohlcv_bars — pinned by
 tests/test_streaming.py.
+
+Draining: the processing-time timeout keeps an ``availableNow`` query
+scheduling empty batches, so it never terminates by itself.
+``bars_stream.run_to_memory`` stops it from its progress records; pass it
+``timeout_ms=heartbeat_ms`` when the heartbeat-closed bars must be in the
+output.
 """
 
 from __future__ import annotations
@@ -292,215 +298,3 @@ def incremental_bars(
         outputMode="append",
         timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
     )
-
-
-def drain_to_memory(
-    bars: DataFrame,
-    query_name: str,
-    *,
-    settle_secs: float = 5.0,
-    max_secs: float = 120.0,
-    await_state_drain: bool = False,
-) -> None:
-    """Run the stateful stream into an in-memory table until output settles,
-    then stop.
-
-    `trigger(availableNow)` never terminates under ProcessingTimeTimeout —
-    pending timeouts keep scheduling (empty) microbatches — so
-    `awaitTermination` would hang; instead poll the sink row count and stop
-    once it has been stable for ``settle_secs`` (long enough for the
-    heartbeat timeout batch to fire when heartbeat_ms < settle_secs*1000)
-    AND the engine is quiescent: no trigger mid-flight and the most recent
-    completed microbatch consumed zero input rows. Wall-clock stability
-    alone truncates output on a loaded host where one slow microbatch takes
-    longer than ``settle_secs`` without appending rows.
-    """
-    import time
-
-    spark = bars.sparkSession
-    q = (
-        bars.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    deadline = time.time() + max_secs
-    last, stable_since = -1, time.time()
-    prev_batch_id, batch_id_repeats = None, 0
-    data_seen = False
-    while time.time() < deadline and q.isActive:
-        # sticky: has ANY completed batch consumed input rows yet? An initial
-        # EMPTY batch completing before the data batch must not satisfy the
-        # 0-input quiescence test (that returned an empty sink once on a
-        # loaded host).
-        if not data_seen:
-            data_seen = any(
-                (p or {}).get("numInputRows", 0) > 0 for p in q.recentProgress
-            )
-        n = spark.table(query_name).count()
-        if n != last:
-            last, stable_since = n, time.time()
-        else:
-            trigger_idle = not q.status.get("isTriggerActive", True)
-            progress = q.lastProgress
-            batch_id = progress.get("batchId") if progress else None
-            # batch_id None means NO batch has completed yet — the stream is
-            # still initializing, never "frozen" (on a loaded host the first
-            # batch can take longer than settle_secs; exiting here returned
-            # an empty sink once)
-            if batch_id is not None and batch_id == prev_batch_id:
-                batch_id_repeats += 1
-            else:
-                batch_id_repeats = 0
-            prev_batch_id = batch_id
-            # Two quiescence contracts, chosen by the caller:
-            # - await_state_drain=True (emit-on-timeout streams): the
-            #   precise signal is the stream's own state metrics — once a
-            #   completed batch reports numRowsTotal == 0, every key has
-            #   emitted and removed its state. Sink-stability plus a
-            #   0-input completed batch is NOT sufficient there: under
-            #   load, empty timeout-CHECK batches complete before the
-            #   emissions fire and once truncated the output. Streams that
-            #   deliberately KEEP compact state across timeout emissions
-            #   (streaming dedup's cumulative (min_id, n, emitted_n)) never
-            #   reach numRowsTotal == 0; for them the signal is a completed
-            #   batch that consumed no input AND updated no state rows
-            #   AFTER at least one emission reached the sink — the emission
-            #   wave itself updates every fired key's state, so a 0-update
-            #   idle batch means no timer is mid-flight. (availableNow keeps
-            #   scheduling empty microbatches while ANY timer is registered,
-            #   so the frozen-batchId fallback alone would wait out
-            #   max_secs.)
-            # - await_state_drain=False (streams whose residual state is
-            #   deliberately never flushed, e.g. the incremental-bars gate
-            #   with its beyond-horizon heartbeat): state never empties, so
-            #   quiescence is a completed 0-input batch — all emissions come
-            #   from data batches, none are pending.
-            # Fallback for both: a frozen batchId across idle polls means
-            # the engine will never schedule another batch — exit rather
-            # than wait out max_secs.
-            if await_state_drain:
-                quiesced = False
-                if progress is not None:
-                    ops = progress.get("stateOperators") or []
-                    drained = bool(ops) and all(
-                        op.get("numRowsTotal", 1) == 0 for op in ops
-                    )
-                    # Kept-state streams: safe to exit only when (a) the
-                    # current batch is fully idle (no input, no state
-                    # updates) AND (b) the most recent DATA batch has
-                    # already been followed by its timeout wave — every
-                    # data batch re-arms its keys' timers, and the wave
-                    # that fires them updates state with zero input, so a
-                    # 0-input updates>0 batch AFTER the last input>0 batch
-                    # is the evidence. Without (b), an idle CHECK batch
-                    # completing between a data batch and its wave would
-                    # truncate the wave's emissions (the race the old
-                    # numRowsTotal==0 signal existed to prevent).
-                    idle_now = (
-                        last > 0
-                        and progress.get("numInputRows", 1) == 0
-                        and bool(ops)
-                        and all(op.get("numRowsUpdated", 1) == 0 for op in ops)
-                    )
-                    wave_done = False
-                    if idle_now:
-                        last_data_bid = -1
-                        last_wave_bid = -1
-                        for p in q.recentProgress:
-                            if not p:
-                                continue
-                            bid_ = p.get("batchId", -1)
-                            if p.get("numInputRows", 0) > 0:
-                                last_data_bid = max(last_data_bid, bid_)
-                            else:
-                                pops = p.get("stateOperators") or []
-                                if any(
-                                    op.get("numRowsUpdated", 0) > 0 for op in pops
-                                ):
-                                    last_wave_bid = max(last_wave_bid, bid_)
-                        # data batch may have scrolled out of the progress
-                        # buffer (last_data_bid -1): any wave still in the
-                        # buffer necessarily came after it
-                        wave_done = last_wave_bid >= 0 and last_wave_bid > last_data_bid
-                    quiesced = drained or (idle_now and wave_done)
-            else:
-                quiesced = progress is not None and progress.get("numInputRows", 1) == 0
-            if (
-                data_seen
-                and time.time() - stable_since >= settle_secs
-                and (quiesced or (trigger_idle and batch_id_repeats >= 3))
-            ):
-                break
-        time.sleep(0.5)
-    stop_query_quietly(q, spark)
-
-
-def stop_query_quietly(q, spark, idle_wait_secs: float = 5.0) -> None:
-    """Stop a stateful stream without state-store abort noise (round-8
-    item 6). ``q.stop()`` interrupts whatever micro-batch is mid-flight;
-    under ProcessingTimeTimeout, availableNow keeps scheduling timeout-
-    check batches forever, so the interrupt regularly lands mid-commit and
-    the task logs 'Aborting commit' / HDFSBackedStateStore ERROR stacks.
-    Harmless — every result was already drained and the abort-retry is the
-    task protocol working — but it buries real errors in every gate log.
-    Two layers: (1) wait (bounded) for the trigger to go idle so the stop
-    lands BETWEEN batches; (2) during the stop itself, lower the four
-    teardown-noisy log categories to OFF and restore them after — the
-    window where they are dark is one where the only possible messages are
-    the aborts of batches whose output nobody will read."""
-    import time as _time
-
-    deadline = _time.time() + idle_wait_secs
-    while (
-        _time.time() < deadline
-        and q.isActive
-        and q.status.get("isTriggerActive", False)
-    ):
-        _time.sleep(0.05)
-
-    noisy = (
-        "org.apache.spark.sql.execution.datasources.v2.DataWritingSparkTask",
-        "org.apache.spark.sql.execution.datasources.v2.WriteToDataSourceV2Exec",
-        "org.apache.spark.sql.execution.streaming.state",
-        "org.apache.spark.executor.Executor",
-        "org.apache.spark.scheduler.TaskSetManager",
-        "org.apache.spark.util.Utils",
-        "org.apache.spark.TaskContextImpl",
-    )
-    # prev accumulates category->level as each is silenced; a failure
-    # mid-loop must NOT discard it — whatever was already set to OFF still
-    # gets restored in the finally block (ADVICE r8: nulling the whole map
-    # on a partial failure left categories dark for the rest of the session)
-    prev: dict = {}
-    configurator = None
-    try:
-        jvm = spark.sparkContext._jvm
-        log_manager = jvm.org.apache.logging.log4j.LogManager
-        configurator = jvm.org.apache.logging.log4j.core.config.Configurator
-        off = jvm.org.apache.logging.log4j.Level.OFF
-    except Exception:  # pragma: no cover - alternate log backends
-        configurator = None
-    if configurator is not None:
-        for name in noisy:
-            try:
-                prev[name] = log_manager.getLogger(name).getLevel()
-                configurator.setLevel(name, off)
-            except Exception:  # pragma: no cover - per-category failure
-                prev.pop(name, None)  # this one wasn't silenced; skip it
-    try:
-        q.stop()
-        q.awaitTermination()
-    finally:
-        if prev:
-            # killed tasks log their abort stacks ASYNCHRONOUSLY after
-            # awaitTermination returns (executor threads unwind on their
-            # own schedule) — hold the categories dark briefly so the
-            # restore doesn't race the very noise being suppressed
-            _time.sleep(3.0)
-            for name, level in prev.items():
-                try:
-                    configurator.setLevel(name, level)
-                except Exception:  # pragma: no cover
-                    pass

@@ -87,7 +87,7 @@ TARGETS = [
     # (span-containment) judgment. ivfpq_* are deliberately absent:
     # their wall is the training subtree already measured by
     # pq_trained_codebooks (the misleading-row class); streaming_pq_codes
-    # is drain-settle-dominated like the other streaming rows.
+    # is drain-dominated like the other streaming rows.
     "bigram_perplexity",
     "pq_trained_codebooks",
     "pq_trained_recall_audit",

@@ -14,7 +14,7 @@ from finiextestingide_spark.streaming.ann_stream import (
     streaming_ivf_assign,
     streaming_pq_lake_ingest,
 )
-from finiextestingide_spark.streaming.incremental_bars import drain_to_memory
+from finiextestingide_spark.streaming.bars_stream import run_to_memory
 
 
 def _vectors(spark, n=24, dim=4):
@@ -103,7 +103,7 @@ def test_streaming_assign_parity_and_merge(spark, tmp_path):
         spark.readStream.schema(schema).parquet(pq).where(F.col("vec_id") % 2 == 1)
     )
     out = streaming_ivf_assign(tail, rows).select("vec_id", "centroid_id")
-    drain_to_memory(out, "t_ann_stream", settle_secs=1.0)
+    run_to_memory(out, "t_ann_stream")
 
     hist = sim.assign_centroids(
         vectors.where(F.col("vec_id") % 2 == 0), centroids
@@ -265,7 +265,7 @@ def test_streaming_pq_encode_parity_and_merge(spark, tmp_path):
         .where(F.col("vec_id") % 2 == 1)
     )
     out = streaming_pq_encode(tail, books).select("vec_id", "pq0", "pq1")
-    drain_to_memory(out, "t_pq_stream", settle_secs=1.0)
+    run_to_memory(out, "t_pq_stream")
     hist = pq_encode(vectors.where(F.col("vec_id") % 2 == 0), books).select(
         "vec_id", "pq0", "pq1"
     )

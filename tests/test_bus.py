@@ -92,10 +92,8 @@ def test_bus_stream_feeds_live_pipeline_with_batch_parity(spark, tmp_path):
     the same ticks (closed buckets), proving a production
     readStream.format('kafka') source slots in with parity."""
     from finiextestingide_spark.operators.bars import ohlcv_bars
-    from finiextestingide_spark.streaming.incremental_bars import (
-        drain_to_memory,
-        incremental_bars,
-    )
+    from finiextestingide_spark.streaming.bars_stream import run_to_memory
+    from finiextestingide_spark.streaming.incremental_bars import incremental_bars
 
     ticks = _ticks(spark, n=240)
     bus_dir = str(tmp_path / "bus")
@@ -105,7 +103,7 @@ def test_bus_stream_feeds_live_pipeline_with_batch_parity(spark, tmp_path):
         "mid", (F.col("bid") + F.col("ask")) / 2
     ).withColumn("volume", F.lit(1.0))
     bars = incremental_bars(decoded, 60_000, heartbeat_ms=3_600_000_000)
-    drain_to_memory(bars, "bus_bars", settle_secs=4.0)
+    run_to_memory(bars, "bus_bars")
     got = {
         (r["symbol"], r["bar_ts"]): (r["open"], r["high"], r["low"], r["close"],
                                      r["volume"], r["tick_count"])

@@ -25,7 +25,9 @@ QUERIES = all_queries()
 #: scorer's level loop independently: ~+15 s (this module's default run
 #: went 33.0 -> 54.6 s on 4 vCPUs, 6.5 s of it the FutureWarning test);
 #: the bucketed reconcile stream and its bootstrap-seed path: 2.8 s and
-#: 6.7 s at sf0.001 on local[4]
+#: 6.7 s at sf0.001 on local[4]; both stop rules of
+#: ``bars_stream.run_to_memory``, the emit-on-timeout dedup stream and the
+#: stateless quality stream: 13.7 s and 1.6 s at sf0.001 on local[4]
 DEFAULT_ORACLE_SLICE = (
     "streaming_live_replay",
     "streaming_live_limit",
@@ -34,6 +36,8 @@ DEFAULT_ORACLE_SLICE = (
     "trigram_mkn_perplexity",
     "streaming_reconciliation",
     "streaming_reconcile_tail",
+    "streaming_dedup_exact",
+    "streaming_gopher_quality",
 )
 
 
@@ -107,3 +111,19 @@ def test_live_gate_workers_raise_no_future_warning(spark, sf_dir, duck):
     finally:
         del env["PYTHONWARNINGS"]
     assert not compare_frames(got, duck.execute(q.sql).fetchdf())
+
+
+@pytest.mark.parametrize(
+    "name", ["streaming_reconcile_tail", "streaming_reconcile_restart"]
+)
+def test_reconcile_gate_removes_its_seed_ledger(
+    name, spark, sf_dir, tmp_path, monkeypatch
+):
+    """The bootstrap-seed reconcile gates write their ledger under the
+    system temp dir; once the stream is drained the ledger must be gone,
+    or every gate call leaves a directory behind."""
+    import tempfile
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    assert QUERIES[name].fn(spark, sf_dir).count() > 0
+    assert list(tmp_path.iterdir()) == []

@@ -1201,11 +1201,6 @@ def test_no_wall_clock_in_strategy_surface():
     violations = []
     for sub in ("operators", "streaming", "functions"):
         for py in (pkg / sub).rglob("*.py"):
-            # incremental_bars.py hosts drain_to_memory, the stream-polling
-            # HARNESS loop (framework code in the reference's layout, not
-            # algo surface) — wall-clock polling is its job
-            if py.name == "incremental_bars.py":
-                continue
             violations.extend(find_wall_clock_calls(py, allow_pragma=True))
     assert not violations, "\n".join(violations)
 

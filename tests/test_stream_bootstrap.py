@@ -14,13 +14,13 @@ import pytest
 # full seed+tail parity drives of the streaming bootstrap protocol (~4 min)
 pytestmark = pytest.mark.slow
 
+from finiextestingide_spark.streaming.bars_stream import run_to_memory
 from finiextestingide_spark.streaming.dedup_stream import (
     bootstrap_dedup_state,
     streaming_exact_dedup,
 )
 from finiextestingide_spark.streaming.incremental_bars import (
     bootstrap_bar_state,
-    drain_to_memory,
     incremental_bars,
 )
 
@@ -58,7 +58,7 @@ def test_dedup_seed_plus_tail_equals_batch(spark, tmp_path):
         bootstrap=snap, bootstrap_dir=str(tmp_path / "ledger"),
     )
     name = "t_dedup_boot"
-    drain_to_memory(out, name, settle_secs=4.0, await_state_drain=True)
+    run_to_memory(out, name, timeout_ms=1_500)
     rows = spark.table(name).collect()
     # emitted rows are cumulative; the LATEST (largest n) per hash stands
     got = {}
@@ -92,7 +92,7 @@ def test_dedup_sink_merge_equals_batch(spark, tmp_path):
     stream = spark.readStream.schema(DOC_DDL).parquet(tail_dir)
     out = streaming_exact_dedup(stream, heartbeat_ms=1_500)  # fresh state
     name = "t_dedup_sinkmerge"
-    drain_to_memory(out, name, settle_secs=4.0, await_state_drain=True)
+    run_to_memory(out, name, timeout_ms=1_500)
 
     merged = {
         r["content_hash"]: (r["min_id"], r["n"])
@@ -142,7 +142,7 @@ def test_bars_seed_plus_tail_equals_uninterrupted(spark, tmp_path):
         stream = spark.readStream.schema(TICK_DDL).parquet(d)
         bars = incremental_bars(stream, 1_000, heartbeat_ms=3_600_000_000, **kw)
         name = f"t_bars_{tag}"
-        drain_to_memory(bars, name, settle_secs=4.0)
+        run_to_memory(bars, name)
         return {
             (r["symbol"], r["bar_ts"]): (
                 r["open"], r["high"], r["low"], r["close"],
@@ -212,7 +212,7 @@ def test_bars_seed_tie_order_with_tick_seq(spark, tmp_path):
         stream = spark.readStream.schema(ddl).parquet(d)
         bars = incremental_bars(stream, 1_000, heartbeat_ms=3_600_000_000, **kw)
         name = f"tie_bars_{tag}"
-        drain_to_memory(bars, name, settle_secs=4.0)
+        run_to_memory(bars, name)
         return {
             (r["symbol"], r["bar_ts"]): (
                 r["open"], r["high"], r["low"], r["close"],
@@ -300,7 +300,6 @@ def test_streaming_lsh_candidates_equal_batch_pairs(spark, tmp_path):
     the source slices micro-batches (two files force at least two)."""
     from finiextestingide_spark.operators import dedup as dd
     from finiextestingide_spark.streaming.dedup_stream import streaming_lsh_candidates
-    from finiextestingide_spark.streaming.bars_stream import run_to_memory
 
     docs = _lsh_docs(spark)
     k, bands = 8, 4
@@ -333,7 +332,6 @@ def test_streaming_lsh_bootstrap_restart_parity(spark, tmp_path):
     ONLY pairs with at least one tail member (history×history is the
     batch join's job)."""
     from finiextestingide_spark.operators import dedup as dd
-    from finiextestingide_spark.streaming.bars_stream import run_to_memory
     from finiextestingide_spark.streaming.dedup_stream import (
         bootstrap_lsh_state,
         merged_lsh_view,
@@ -405,7 +403,6 @@ def test_streaming_lsh_bucket_cap_bounds_pairs(spark, tmp_path):
     (every doc identical) stops pairing at the cap instead of emitting
     quadratically forever; capped members are counted, not errored (a
     stream cannot fail loud mid-flight)."""
-    from finiextestingide_spark.streaming.bars_stream import run_to_memory
     from finiextestingide_spark.streaming.dedup_stream import streaming_lsh_candidates
 
     rows = [(i, "all documents carry this identical body text") for i in range(12)]

@@ -8,7 +8,7 @@ from datetime import datetime, timedelta
 
 import pytest
 
-# availableNow/drain-settle streaming parity drives (~3 min total) — drain-heavy tier; the streaming gates stay covered by the driver's own oracle window
+# availableNow streaming parity drives (~3 min total) — drain-heavy tier; the streaming gates stay covered by the driver's own oracle window
 pytestmark = pytest.mark.slow
 import pyspark.sql.functions as F
 
@@ -110,10 +110,7 @@ def test_incremental_bars_stateful(spark, tmp_path):
     """R7 stateful close-on-next-bucket renderer: closed bars match batch
     OHLCV for every bucket except each key's still-open last one."""
     from finiextestingide_spark.operators.bars import ohlcv_bars
-    from finiextestingide_spark.streaming.incremental_bars import (
-        drain_to_memory,
-        incremental_bars,
-    )
+    from finiextestingide_spark.streaming.incremental_bars import incremental_bars
 
     ddl = "symbol string, timestamp timestamp, time_msc long, mid double, volume double"
     rows = []
@@ -132,9 +129,7 @@ def test_incremental_bars_stateful(spark, tmp_path):
         ticks = read_tick_stream(spark, str(d), batch_df.schema)
         name = f"incbars_{uuid.uuid4().hex[:8]}"
         # heartbeat far in the future: only close-on-next-bucket bars emit
-        drain_to_memory(
-            incremental_bars(ticks, 60_000, heartbeat_ms=3_600_000), name, settle_secs=3.0
-        )
+        run_to_memory(incremental_bars(ticks, 60_000, heartbeat_ms=3_600_000), name)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old_parts)
     got = {
@@ -267,7 +262,6 @@ def test_streaming_dedup_matches_batch(spark, tmp_path):
 
     from finiextestingide_spark.operators.text import normalized_text
     from finiextestingide_spark.streaming.dedup_stream import streaming_exact_dedup
-    from finiextestingide_spark.streaming.incremental_bars import drain_to_memory
 
     rows = [
         (1, "Hello, World!"),
@@ -282,9 +276,7 @@ def test_streaming_dedup_matches_batch(spark, tmp_path):
 
     stream = spark.readStream.schema(docs.schema).parquet(src)
     out = streaming_exact_dedup(stream, heartbeat_ms=1_000)
-    drain_to_memory(
-        out, "t_stream_dedup", settle_secs=2.0, max_secs=60.0, await_state_drain=True
-    )
+    run_to_memory(out, "t_stream_dedup", timeout_ms=1_000)
     got = {
         r["content_hash"]: (r["canonical_id"], r["group_size"])
         for r in spark.table("t_stream_dedup").collect()
@@ -367,7 +359,6 @@ def test_asof_stream_staleness_flip(spark, tmp_path):
     from datetime import datetime, timedelta
 
     from finiextestingide_spark.streaming.asof_stream import asof_signal_stream
-    from finiextestingide_spark.streaming.incremental_bars import drain_to_memory
 
     def at(secs):
         return datetime(2026, 1, 1, 0, 0, 0) + timedelta(seconds=secs)
@@ -386,7 +377,7 @@ def test_asof_stream_staleness_flip(spark, tmp_path):
     ss = spark.readStream.schema(signals.schema).parquet(src_s)
     # 30s bound: ticks at +1/+5/+20 are fresh, +40/+80 stale
     out = asof_signal_stream(st, ss, max_staleness_ms=30_000)
-    drain_to_memory(out, "t_asof_stale", settle_secs=2.0, max_secs=60.0)
+    run_to_memory(out, "t_asof_stale")
     rows = sorted(
         spark.table("t_asof_stale").collect(), key=lambda r: r["ts"]
     )
@@ -399,7 +390,6 @@ def test_streaming_quality_flags_match_batch(spark, tmp_path):
     import pyspark.sql.functions as F
 
     from finiextestingide_spark.operators.text import gopher_quality_flags
-    from finiextestingide_spark.streaming.incremental_bars import drain_to_memory
     from finiextestingide_spark.streaming.quality_stream import (
         merged_quality_flags,
         streaming_quality_flags,
@@ -421,7 +411,7 @@ def test_streaming_quality_flags_match_batch(spark, tmp_path):
         .where(F.col("doc_id") % 2 == 1)
     )
     out = streaming_quality_flags(tail, min_words=10, min_stop_hits=1)
-    drain_to_memory(out, "t_quality_stream", settle_secs=1.0)
+    run_to_memory(out, "t_quality_stream")
 
     g = gopher_quality_flags(F.col("text"), min_words=10, min_stop_hits=1)
     flags_cols = [
@@ -468,7 +458,6 @@ def test_streaming_quality_flags_compose_into_curation(spark, tmp_path):
 
     from finiextestingide_spark.operators.curation import curate_corpus
     from finiextestingide_spark.operators.text import gopher_quality_flags
-    from finiextestingide_spark.streaming.incremental_bars import drain_to_memory
     from finiextestingide_spark.streaming.quality_stream import (
         merged_quality_flags,
         streaming_quality_flags,
@@ -494,7 +483,7 @@ def test_streaming_quality_flags_compose_into_curation(spark, tmp_path):
         .where(F.col("doc_id") % 2 == 1)
     )
     out = streaming_quality_flags(tail, min_words=5, min_stop_hits=1)
-    drain_to_memory(out, "t_quality_curation", settle_secs=1.0)
+    run_to_memory(out, "t_quality_curation")
     g = gopher_quality_flags(F.col("text"), min_words=5, min_stop_hits=1)
     hist = docs.where(F.col("doc_id") % 2 == 0).select(
         "doc_id", g["keep"].alias("keep")

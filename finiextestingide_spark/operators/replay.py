@@ -743,25 +743,6 @@ class _Position:
     sig_val: float | None = None
 
 
-def _replay_one(pdf: pd.DataFrame) -> pd.DataFrame:
-    """The per-scenario state machine, config read from the (constant)
-    scenario columns joined onto the group's rows."""
-    first = pdf.iloc[0]
-    scen = {
-        k: first.get(k)
-        for k in (
-            "scenario_id",
-            "parameters",
-            "tick_processing_budget_ms",
-            "latency_seed",
-            "latency_min_ms",
-            "latency_max_ms",
-            "max_ticks",
-        )
-    }
-    return _replay_core(pdf, scen)
-
-
 class AccountState:
     """Shared account-scope state for multi-symbol LIVE sessions: one
     balance and one open-lots total spanning every symbol sub-book, so the
@@ -785,9 +766,10 @@ class ReplaySession:
     its live autotrader loop (tick_pipeline_core.py:1-16 — "one tick in,
     bars/decision/execution out"); this class is the engine's analogue.
     ``_replay_core`` drives it in a loop over a scenario's tick arrays; the
-    live operator (streaming/live_replay.live_backtest) pickles ONE
-    session per symbol into Structured Streaming state and
-    feeds it each micro-batch — so every strategy and every feature of the
+    live operator (streaming/live_replay._live_fold) pickles each key's
+    book — one session per symbol, sharing one ``AccountState`` under an
+    account key — into Structured Streaming state and feeds it each
+    micro-batch, so every strategy and every feature of the
     batch surface (resting orders, modify/cancel, maker/taker + flat fees,
     spot dual-balance, margin gate, swap accrual, stress rejection, stale
     windows, budget clipping, heartbeats, partial closes, per-position

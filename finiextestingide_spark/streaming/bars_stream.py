@@ -100,6 +100,9 @@ def stream_ohlcv_bars(
 
 # seconds between looks at a running drain's progress records
 _POLL_SECS = 0.1
+# a stopped query's teardown wait: at most this many looks at the
+# scheduler's running-task count, _POLL_SECS apart
+_TEARDOWN_POLLS = 30
 
 
 def _start_ms(progress: Mapping) -> int:
@@ -178,6 +181,20 @@ def run_to_memory(
             return
 
 
+def _running_tasks(spark: SparkSession) -> int:
+    """Tasks the task scheduler counts as running on any executor; a task
+    leaves the count when its executor reports it ended, after any abort
+    it logs. (``statusTracker().getExecutorInfos()`` reads the listener's
+    status store, which lags: it read 0 running while the scheduler still
+    counted 18 killed tasks of a stopped dedup stream.)"""
+    scheduler = spark.sparkContext._jsc.sc().taskScheduler()
+    counts = scheduler.runningTasksByExecutors().valuesIterator()
+    n = 0
+    while counts.hasNext():
+        n += counts.next()
+    return n
+
+
 def stop_query_quietly(q, spark: SparkSession) -> None:
     """Stop a drained stateful stream without state-store abort noise.
     ``q.stop()`` interrupts whatever micro-batch is mid-flight; under
@@ -226,9 +243,13 @@ def stop_query_quietly(q, spark: SparkSession) -> None:
         if prev:
             # killed tasks log their abort stacks ASYNCHRONOUSLY after
             # awaitTermination returns (executor threads unwind on their
-            # own schedule) — hold the categories dark briefly so the
-            # restore doesn't race the very noise being suppressed
-            time.sleep(3.0)
+            # own schedule) — hold the categories dark until no task runs
+            # on any executor, so the restore doesn't race the very noise
+            # being suppressed
+            for _ in range(_TEARDOWN_POLLS):
+                if _running_tasks(spark) == 0:
+                    break
+                time.sleep(_POLL_SECS)
             for name, level in prev.items():
                 try:
                     configurator.setLevel(name, level)

@@ -7,13 +7,17 @@ autotrader_tick_loop.py:201+, shared core tick_pipeline_core.py:1-16), and
 its parity suite pins that the two pipelines produce identical trade
 records on the same input (tests/parity/test_trade_records_parity.py).
 
-Engine mapping: ``live_backtest`` keys the tick stream by symbol and runs
-``applyInPandasWithState`` whose per-key state is one pickled
-``operators.replay.ReplaySession`` — the per-tick state machine the batch
-replay drives. This operator, the cold-start snapshot producers
-(``bootstrap_live_sessions``/``bootstrap_account_sessions``) and the
-account-scoped ``live_backtest_account`` fold their events into that one
-class through ``_drive_session_rows``, so batch/live parity holds by
+Engine mapping: ``live_backtest`` (keyed by symbol) and
+``live_backtest_account`` (keyed by account) run ONE
+``applyInPandasWithState`` fold, ``_live_fold``, whose per-key state is
+the pickled BOOK ``(AccountState | None, {symbol: ReplaySession})`` — one
+``operators.replay.ReplaySession`` (the per-tick state machine the batch
+replay drives) per symbol. A per-symbol key's book holds one session and
+no account (the session keeps its own balance and spot accounting); an
+account key's sub-books share one ``AccountState``. The snapshot
+producers (``bootstrap_live_sessions``/``bootstrap_account_sessions``)
+build the same book in ``_snapshot_books``, and every path folds events
+through ``_drive_session_rows``, so batch/live parity holds by
 construction: there is no second implementation of the tick loop to
 drift. A trade record is emitted the moment its position closes; final
 open positions never close (a live session has no END), which is
@@ -24,8 +28,8 @@ with ``time_msc`` = epoch-milliseconds event time — the engine CLOCK,
 exactly as in the batch core (bar bucketing, latency deadlines and trade
 timestamps all run on it). Optional ``tick_seq`` (ingest sequence) and
 ``collected_msc`` (arrival clock) columns join the sort key. Ticks are
-totally ordered per symbol with the batch core's exact precedence —
-``(time_msc, tick_seq, timestamp, collected_msc, bid, ask)`` over
+totally ordered per key with the batch core's exact precedence —
+``(time_msc, tick_seq, timestamp, collected_msc, symbol, bid, ask)`` over
 whichever columns are present — so intra-millisecond ties resolve
 identically in both pipelines and the live-vs-oracle hash gate is not
 data-dependent (reference bug #385 is tick-order instability).
@@ -44,10 +48,13 @@ Arrival-order contract: state only moves forward — a signal arriving
 after a later-stamped tick was already processed applies from the next
 tick on, exactly like the reference's queue-fed loop.
 
-Restart contract: the per-key state schema is one ``blob`` column (the
-pickled session). A checkpoint resumes only under that layout; a
-checkpoint whose state store holds any other per-symbol schema must be
-restarted cold or seeded through ``bootstrap``.
+Restart contract: the per-key state schema is one ``blob`` column holding
+the pickled book, and a snapshot's ``blob`` holds the same book. A
+checkpoint or bootstrap ledger resumes only under that layout. Per-symbol
+checkpoints and ``bootstrap_live_sessions`` ledgers written while the
+per-symbol state was a bare pickled ``ReplaySession`` (or any other
+per-symbol schema) must be restarted cold or re-seeded from a fresh
+snapshot.
 """
 
 from __future__ import annotations
@@ -72,7 +79,9 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ..operators.replay import merge_signal_rows
+from ..operators.clipping import ClippingMonitor, write_report_row
+from ..operators.replay import AccountState, ReplaySession, merge_signal_rows
+from .bootstrap import check_staleness, persist_ledger
 
 TRADE_SCHEMA = StructType(
     [
@@ -109,25 +118,15 @@ _CLIP_LOG = logging.getLogger("finiextestingide_spark.clipping")
 _BLOB_STATE_SCHEMA = StructType([StructField("blob", BinaryType())])
 
 
-def _bootstrap_schema(key_name: str) -> StructType:
-    return StructType(
-        [
-            StructField(key_name, StringType()),
-            StructField("blob", BinaryType()),
-            StructField("n_trades", LongType()),
-            StructField("saved_at", TimestampType()),
-        ]
-    )
-
-
-def _sorted_wire(pdf: pd.DataFrame, *, extra_key: str | None = None) -> pd.DataFrame:
-    """The batch core's total event order (#385 key precedence), with
+def _sorted_wire(pdf: pd.DataFrame) -> pd.DataFrame:
+    """The batch core's total event order (#385 key precedence, symbol as
+    the stable tiebreak after it — constant within a per-symbol key), with
     signal rows first at equal event time — the one sort every session
     drive shares."""
     keys = [
         c
         for c in ("time_msc", "tick_seq", "timestamp", "collected_msc",
-                  *((extra_key,) if extra_key else ()), "bid", "ask")
+                  "symbol", "bid", "ask")
         if c in pdf.columns
     ]
     if "__is_sig" in pdf.columns:
@@ -144,45 +143,44 @@ def _sorted_wire(pdf: pd.DataFrame, *, extra_key: str | None = None) -> pd.DataF
     return pdf.sort_values(keys, kind="mergesort")
 
 
-def bootstrap_live_sessions(
-    ticks: DataFrame,
-    params: dict,
-    *,
-    latency_seed: int = 42,
-    latency_min_ms: int = 0,
-    latency_max_ms: int = 0,
-    signals: DataFrame | None = None,
-) -> DataFrame:
-    """BATCH per-symbol ``ReplaySession`` snapshot from a history ledger —
-    the bulk half of the live loop's cold-start protocol (reference:
-    Cold-Start Recovery #355 + algo_state_store.py Category B, and the
-    warmup path autotrader_warmup_preparator.py: reconstruct the session
-    at startup instead of replaying the feed).
+def _wire(ticks: DataFrame, signals: DataFrame | None) -> DataFrame:
+    return ticks if signals is None else merge_signal_rows(ticks, signals)
 
-    ticks(symbol, timestamp, time_msc, bid, ask[, tick_seq,
-    collected_msc]) BATCH (+ optional signals BATCH) -> one row per
-    symbol: ``(symbol, blob, n_trades, saved_at)`` where ``blob`` is the
-    pickled end-of-history session — positions, balance, forming bar,
-    close window, resting book, latency FIFO, rng state, trade counter —
-    EXACTLY the state an uninterrupted live run would hold after the same
-    events (no ``finish()``: a live session never END-closes), ``n_trades``
-    is how many trades history closed (the tail's trade_ids continue from
-    it), and ``saved_at`` stamps the snapshot's EVENT time (max time_msc)
-    for the trading-day staleness check at restore.
 
-    Runs as ONE ``applyInPandas`` pass per symbol — history replays at
-    batch-scan speed with no streaming state machinery, no checkpoint and
-    no per-micro-batch overhead; the history's trade records themselves
-    are the batch path's output (``run_backtest`` / this same drive), so
-    they are drained and only counted here. Pass the result to
-    ``live_backtest(bootstrap=..., bootstrap_dir=...)``."""
-    from ..operators.replay import ReplaySession
+def _account_wire(
+    ticks: DataFrame, params: dict, signals: DataFrame | None, account_col: str | None
+) -> tuple[DataFrame, float]:
+    """The account forms' shared input checks, their wire keyed by
+    ``__account`` (``account_col``, or one "ACCOUNT") and their shared
+    starting balance."""
+    if params.get("spot_mode") == "1":
+        raise ValueError(
+            "live_backtest_account is a margin-account surface; spot_mode "
+            "carries per-pair asset balances, not one shared margin account"
+        )
+    if signals is not None and account_col is not None:
+        raise ValueError(
+            "signals ride the single-account form: the (symbol, sig_ts, "
+            "score) wire carries no account column to key a multi-account "
+            "stream by"
+        )
+    src = _wire(ticks, signals)
+    src = (
+        src.withColumn("__account", F.lit("ACCOUNT"))
+        if account_col is None
+        else src.withColumnRenamed(account_col, "__account")
+    )
+    return src, float(params.get("start_balance", 10_000.0))
 
-    p = dict(params)
-    p["equity_sample_every"] = "0"
-    scen = {
-        "scenario_id": 0,
-        "parameters": p,
+
+def _scenario_base(
+    params: dict, latency_seed: int, latency_min_ms: int, latency_max_ms: int
+) -> dict:
+    """A sub-book's scenario without its ``scenario_id``;
+    ``equity_sample_every`` is forced to 0 (a live session emits trades,
+    and an unbounded sample buffer must not grow in state)."""
+    return {
+        "parameters": {**params, "equity_sample_every": "0"},
         "tick_processing_budget_ms": None,
         "max_ticks": None,
         "latency_seed": latency_seed,
@@ -190,34 +188,75 @@ def bootstrap_live_sessions(
         "latency_max_ms": latency_max_ms,
     }
 
-    def snap(pdf: pd.DataFrame) -> pd.DataFrame:
-        symbol = pdf["symbol"].iloc[0]
-        pdf = _sorted_wire(pdf)
-        sess = ReplaySession(scen)
-        _drive_session_rows(pdf, lambda _sym: sess)
-        n = len(sess.drain_trades())
-        saved_at = pd.Timestamp(int(pdf["time_msc"].max()), unit="ms")
-        return pd.DataFrame(
-            [(symbol, pickle.dumps(sess), n, saved_at)],
-            columns=["symbol", "blob", "n_trades", "saved_at"],
-        )
 
-    src = ticks if signals is None else merge_signal_rows(ticks, signals)
-    return src.groupBy("symbol").applyInPandas(snap, _bootstrap_schema("symbol"))
+def _new_book(start_balance: float | None) -> tuple:
+    """An empty book; ``start_balance=None`` (a per-symbol key): no account."""
+    return None if start_balance is None else AccountState(start_balance), {}
+
+
+def _book_session(book: tuple, scen_base: dict, sym) -> ReplaySession:
+    """``sym``'s sub-book, opened on first sight with the next scenario id
+    (0 in a one-symbol book) and the book's account."""
+    acct, books = book
+    sess = books.get(sym)
+    if sess is None:
+        sess = books[sym] = ReplaySession(
+            {"scenario_id": len(books), **scen_base}, account=acct
+        )
+    return sess
+
+
+def _propagate_clock(pdf: pd.DataFrame, books: dict) -> None:
+    """R8 cross-symbol clock propagation: a key's single event-time queue
+    IS the clock, so a sub-book whose symbol went quiet heartbeats toward
+    the latest TICK of the batch — its in-gap latency fills resolve at
+    (deadline, its last quote), exactly what its own next tick would
+    resolve retroactively (ReplaySession.heartbeat gates on
+    heartbeat_ms/suppress). Seed rows (stamped with the snapshot's own
+    time) and signal rows do not move the clock, so a one-symbol book,
+    whose session saw every tick, never heartbeats here."""
+    is_tick = pd.Series(True, index=pdf.index)
+    for flag in ("__is_seed", "__is_sig"):
+        if flag in pdf.columns:
+            is_tick &= pdf[flag].fillna(0) == 0
+    if not is_tick.any():
+        return
+    batch_max_t = int(pdf["time_msc"][is_tick].max())
+    for sess in books.values():
+        base = sess.ghost_t if sess.ghost_t is not None else sess.prev_t
+        if base is not None and base < batch_max_t:
+            sess.heartbeat(batch_max_t - base)
+
+
+def _key_monitor(books: dict, interval_s: float) -> ClippingMonitor:
+    """#197: ONE ``ClippingMonitor`` per key (the reference's monitor is
+    per tick LOOP, and a key's feed is one loop), riding on every sub-book
+    so it checkpoints with the book (pickle's memo keeps the sharing);
+    recovered from any sub-book that already carries it."""
+    mons = [getattr(s, "clipping_monitor", None) for s in books.values()]
+    mon = next((m for m in mons if m is not None), None)
+    if mon is None:
+        mon = ClippingMonitor(
+            interval_s, keep_times=256,
+            start_s=time.monotonic(),  # wall-clock-ok: #197 clipping report cadence (observational telemetry)
+        )
+    for s in books.values():
+        s.clipping_monitor = mon
+    return mon
 
 
 def _drive_session_rows(
     pdf: pd.DataFrame, session_for, on_seed=None, monitor=None, clock_ns=None
 ) -> None:
     """Feed sorted wire rows into sessions (``session_for(symbol)`` maps a
-    row to its session — constant for per-symbol drives, a book lookup for
-    account drives; ``on_seed(blob)`` receives snapshot seed rows). Shared
-    by the batch snapshot producers and the streaming run() loops, so the
-    event fold is ONE piece of code in both pipelines.
+    row to its session — a book lookup; ``on_seed(blob)`` receives
+    snapshot seed rows). Shared by the batch snapshot producer and the
+    streaming fold, so the event fold is ONE piece of code in both
+    pipelines.
 
-    ``monitor=True`` (#197): sessions carrying a ``clipping_monitor``
-    attribute (an ``operators.clipping.ClippingMonitor``) get every
-    ``process_tick`` wrapped in a ``clock_ns`` measurement
+    ``monitor=True`` (#197): every session carries a ``clipping_monitor``
+    attribute (an ``operators.clipping.ClippingMonitor``), and every
+    ``process_tick`` is wrapped in a ``clock_ns`` measurement
     (``time.perf_counter_ns`` in the live paths; tests inject a synthetic
     clock) folded against the tick's arrival stamp (the ``collected_msc``
     ingest clock, the reference's tick_delta source)."""
@@ -242,16 +281,89 @@ def _drive_session_rows(
         sess = session_for(sym_l[i] if sym_l is not None else None)
         if sig_l is not None and sig_l[i]:
             sess.process_signal(tsl[i], score_l[i])
-        elif not monitor:
+        elif monitor:
+            t0 = clock_ns()
             sess.process_tick(tsl[i], cl[i], bl[i], al[i])
+            sess.clipping_monitor.record_arrival(cl[i], clock_ns() - t0)
         else:
-            mon = getattr(sess, "clipping_monitor", None)
-            if mon is None:
-                sess.process_tick(tsl[i], cl[i], bl[i], al[i])
-            else:
-                t0 = clock_ns()
-                sess.process_tick(tsl[i], cl[i], bl[i], al[i])
-                mon.record_arrival(cl[i], clock_ns() - t0)
+            sess.process_tick(tsl[i], cl[i], bl[i], al[i])
+
+
+def _snapshot_books(
+    src: DataFrame,
+    key_col: str,
+    out_key: str,
+    scen_base: dict,
+    start_balance: float | None,
+) -> DataFrame:
+    """The one snapshot producer: each ``key_col`` group of the BATCH wire
+    driven through a fresh book in the key's event order, one row
+    ``(out_key, blob, n_trades, saved_at)`` per key."""
+
+    def snap(pdf: pd.DataFrame) -> pd.DataFrame:
+        key = pdf[key_col].iloc[0]
+        pdf = _sorted_wire(pdf)
+        book = _new_book(start_balance)
+        _drive_session_rows(pdf, lambda sym: _book_session(book, scen_base, sym))
+        # the same clock propagation as the live fold's per-batch pass, so
+        # the snapshot equals the uninterrupted session
+        _propagate_clock(pdf, book[1])
+        n = sum(len(s.drain_trades()) for s in book[1].values())
+        saved_at = pd.Timestamp(int(pdf["time_msc"].max()), unit="ms")
+        return pd.DataFrame(
+            [(key, pickle.dumps(book), n, saved_at)],
+            columns=[out_key, "blob", "n_trades", "saved_at"],
+        )
+
+    schema = StructType(
+        [
+            StructField(out_key, StringType()),
+            StructField("blob", BinaryType()),
+            StructField("n_trades", LongType()),
+            StructField("saved_at", TimestampType()),
+        ]
+    )
+    return src.groupBy(key_col).applyInPandas(snap, schema)
+
+
+def bootstrap_live_sessions(
+    ticks: DataFrame,
+    params: dict,
+    *,
+    latency_seed: int = 42,
+    latency_min_ms: int = 0,
+    latency_max_ms: int = 0,
+    signals: DataFrame | None = None,
+) -> DataFrame:
+    """BATCH per-symbol ``ReplaySession`` snapshot from a history ledger —
+    the bulk half of the live loop's cold-start protocol (reference:
+    Cold-Start Recovery #355 + algo_state_store.py Category B, and the
+    warmup path autotrader_warmup_preparator.py: reconstruct the session
+    at startup instead of replaying the feed).
+
+    ticks(symbol, timestamp, time_msc, bid, ask[, tick_seq,
+    collected_msc]) BATCH (+ optional signals BATCH) -> one row per
+    symbol: ``(symbol, blob, n_trades, saved_at)`` where ``blob`` is the
+    pickled end-of-history book ``(None, {symbol: session})`` — the
+    session's positions, balance, forming bar, close window, resting
+    book, latency FIFO, rng state, trade counter — EXACTLY the state an
+    uninterrupted live run would hold after the same events (no
+    ``finish()``: a live session never END-closes), ``n_trades``
+    is how many trades history closed (the tail's trade_ids continue from
+    it), and ``saved_at`` stamps the snapshot's EVENT time (max time_msc)
+    for the trading-day staleness check at restore.
+
+    Runs as ONE ``applyInPandas`` pass per symbol — history replays at
+    batch-scan speed with no streaming state machinery, no checkpoint and
+    no per-micro-batch overhead; the history's trade records themselves
+    are the batch path's output (``run_backtest`` / this same drive), so
+    they are drained and only counted here. Pass the result to
+    ``live_backtest(bootstrap=..., bootstrap_dir=...)``."""
+    return _snapshot_books(
+        _wire(ticks, signals), "symbol", "symbol",
+        _scenario_base(params, latency_seed, latency_min_ms, latency_max_ms),
+        None,
+    )
 
 
 def bootstrap_account_sessions(
@@ -270,63 +382,12 @@ def bootstrap_account_sessions(
     in the same global event-time order (symbol as the stable tiebreak).
     ``account_col=None`` treats the whole ledger as one account (key
     "ACCOUNT", matching the live operator)."""
-    from ..operators.replay import AccountState, ReplaySession
-
-    p = dict(params)
-    p["equity_sample_every"] = "0"
-    if p.get("spot_mode") == "1":
-        raise ValueError(
-            "live_backtest_account is a margin-account surface; spot_mode "
-            "carries per-pair asset balances, not one shared margin account"
-        )
-    start_balance = float(p.get("start_balance", 10_000.0))
-    scen_base = {
-        "parameters": p,
-        "tick_processing_budget_ms": None,
-        "max_ticks": None,
-        "latency_seed": latency_seed,
-        "latency_min_ms": latency_min_ms,
-        "latency_max_ms": latency_max_ms,
-    }
-
-    def snap(pdf: pd.DataFrame) -> pd.DataFrame:
-        account = pdf["__account"].iloc[0]
-        pdf = _sorted_wire(pdf, extra_key="symbol")
-        acct, books = AccountState(start_balance), {}
-
-        def session_for(sym):
-            sess = books.get(sym)
-            if sess is None:
-                sess = books[sym] = ReplaySession(
-                    {"scenario_id": len(books), **scen_base}, account=acct
-                )
-            return sess
-
-        _drive_session_rows(pdf, session_for)
-        # cross-symbol clock propagation, exactly as the live operator's
-        # per-batch pass: quiet sub-books heartbeat toward the ledger's
-        # latest event so the snapshot equals the uninterrupted session
-        tsl = pdf["time_msc"].astype("int64")
-        if len(tsl):
-            batch_max_t = int(tsl.max())
-            for sess in books.values():
-                base = sess.ghost_t if sess.ghost_t is not None else sess.prev_t
-                if base is not None and base < batch_max_t:
-                    sess.heartbeat(batch_max_t - base)
-        n = sum(len(s.drain_trades()) for s in books.values())
-        saved_at = pd.Timestamp(int(tsl.max()), unit="ms")
-        return pd.DataFrame(
-            [(account, pickle.dumps((acct, books)), n, saved_at)],
-            columns=["account", "blob", "n_trades", "saved_at"],
-        )
-
-    src = ticks if signals is None else merge_signal_rows(ticks, signals)
-    src = (
-        src.withColumn("__account", F.lit("ACCOUNT"))
-        if account_col is None
-        else src.withColumnRenamed(account_col, "__account")
+    src, start_balance = _account_wire(ticks, params, signals, account_col)
+    return _snapshot_books(
+        src, "__account", "account",
+        _scenario_base(params, latency_seed, latency_min_ms, latency_max_ms),
+        start_balance,
     )
-    return src.groupBy("__account").applyInPandas(snap, _bootstrap_schema("account"))
 
 
 def _seed_union(
@@ -340,13 +401,11 @@ def _seed_union(
     """Union a session-snapshot ledger into a live wire stream as seed
     rows (``__is_seed=1`` carrying ``__blob``), persisted create-only to
     ``bootstrap_dir`` and replayed as a one-shot file-source stream — the
-    reconcile bootstrap protocol (streaming/bootstrap.py) with a session
-    pickle instead of a commutative merge row. Seed rows sort FIRST within
+    reconcile bootstrap protocol (streaming/bootstrap.py) with a pickled
+    book instead of a commutative merge row. Seed rows sort FIRST within
     a key's micro-batch (before any tail event), and a key whose state
     already exists ignores its seed — checkpoint state outranks the
     ledger, so a restart-from-checkpoint is unaffected."""
-    from .bootstrap import persist_ledger
-
     seed_cols = [
         F.col(key_src).alias(key_dst),
         F.col("saved_at").alias("timestamp"),
@@ -392,6 +451,117 @@ def _trade_rows(symbol: str, trades: list) -> list[tuple]:
     ]
 
 
+def _live_fold(
+    src: DataFrame,
+    key_col: str,
+    scen_base: dict,
+    start_balance: float | None,
+    *,
+    bootstrap: DataFrame | None,
+    bootstrap_dir: str | None,
+    bootstrap_key: str,
+    staleness: dict,
+    timeout_ms: int,
+    clipping: bool,
+    clipping_report_interval_s: float,
+    telemetry_dir: str | None,
+) -> DataFrame:
+    """The one live operator behind ``live_backtest`` and
+    ``live_backtest_account``: the wire ``src`` grouped by ``key_col``,
+    each key's state the pickled book ``(account, {symbol: session})``
+    (``start_balance=None``: no shared account); ``bootstrap`` seeds are
+    unioned in keyed by the snapshot's ``bootstrap_key`` column. The
+    public docstrings state the semantics."""
+    if bootstrap is not None:
+        check_staleness(bootstrap, **staleness)
+        src = _seed_union(
+            src, bootstrap, bootstrap_dir, key_src=bootstrap_key, key_dst=key_col
+        )
+
+    def emit(state: GroupState, book: tuple):
+        books = book[1]
+        rows = [
+            r for sym in sorted(books)
+            for r in _trade_rows(sym, books[sym].drain_trades())
+        ]
+        state.update((pickle.dumps(book),))
+        if timeout_ms > 0:
+            state.setTimeoutDuration(timeout_ms)
+        if rows:
+            yield pd.DataFrame(rows, columns=TRADE_SCHEMA.fieldNames())
+
+    def run(key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState):
+        book = pickle.loads(bytes(state.get[0])) if state.exists else None
+        if state.hasTimedOut:
+            # R8 ghost pass: the feed is quiet — every sub-book heartbeats
+            # against its own last tick (per-symbol gap anchors) and
+            # resolves the latency fills whose deadline the gap has passed
+            # (see ReplaySession.heartbeat for the batch-parity model),
+            # emitting trades NOW instead of at the next real tick.
+            if book is not None:
+                for sym in sorted(book[1]):
+                    book[1][sym].heartbeat(timeout_ms)
+                yield from emit(state, book)
+            return
+        chunks = [c for c in pdfs if len(c)]
+        if not chunks:
+            return
+        pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
+        pdf = _sorted_wire(pdf)
+
+        # lazy book holder: a seed may install the snapshot book, and
+        # checkpoint state outranks the ledger (a seed arriving for an
+        # existing key is a no-op)
+        holder = [book]
+
+        def session_for(sym):
+            if holder[0] is None:
+                holder[0] = _new_book(start_balance)
+            sess = _book_session(holder[0], scen_base, sym)
+            if clipping and getattr(sess, "clipping_monitor", None) is None:
+                _key_monitor(holder[0][1], clipping_report_interval_s)
+            return sess
+
+        def on_seed(blob):
+            if holder[0] is None:
+                holder[0] = pickle.loads(bytes(blob))
+
+        _drive_session_rows(
+            pdf, session_for, on_seed,
+            monitor=clipping, clock_ns=time.perf_counter_ns,  # wall-clock-ok: #197 real processing-time measurement
+        )
+        book = holder[0]
+        if book is None:
+            return
+        if clipping and book[1]:
+            mon = _key_monitor(book[1], clipping_report_interval_s)
+            # Phase 5 analogue: the micro-batch backlog IS this engine's
+            # queue depth — rows waiting in the batch when the key's turn
+            # came (the reference polls queue.Queue.qsize())
+            mon.record_queue_depth(len(pdf))
+            report = mon.get_periodic_report(
+                time.monotonic()  # wall-clock-ok: #197 report cadence
+            )
+            if report is not None:
+                _CLIP_LOG.info("[CLIPPING] %s %s", key[0], report)
+                if telemetry_dir is not None:
+                    write_report_row(telemetry_dir, key[0], report)
+        _propagate_clock(pdf, book[1])
+        yield from emit(state, book)
+
+    return src.groupBy(key_col).applyInPandasWithState(
+        run,
+        outputStructType=TRADE_SCHEMA,
+        stateStructType=_BLOB_STATE_SCHEMA,
+        outputMode="append",
+        timeoutConf=(
+            GroupStateTimeout.ProcessingTimeTimeout
+            if timeout_ms > 0
+            else GroupStateTimeout.NoTimeout
+        ),
+    )
+
+
 def live_backtest(
     ticks: DataFrame,
     params: dict,
@@ -417,15 +587,16 @@ def live_backtest(
     ``run_backtest`` reads it (strategy and its knobs, bar_ms, lots,
     fees, entry_type/offsets, modify/cancel lifecycle, SL/TP, ...).
 
-    Per-symbol state is the pickled ``operators.replay.ReplaySession``,
-    the same state-machine object the batch loop drives tick by tick, so
-    every strategy (target- and action-model, ctx strategies with
-    per-tick management, scale_out ladders, entry-point plugins whose
-    modules are importable on executors) and the whole order surface
-    (resting limit/stop/stop_limit entries, #318 modify/cancel, broker
-    SL/TP, maker/taker fees, spot accounting, margin gates, swap accrual,
-    stress rejection, stale windows) run live with batch parity by
-    construction. The pickle is the checkpoint form of the reference's
+    Per-symbol state is the pickled book ``(None, {symbol: session})``
+    (module docstring): one ``operators.replay.ReplaySession`` and no
+    shared account, the same state-machine object the batch loop drives
+    tick by tick, so every strategy (target- and action-model, ctx
+    strategies with per-tick management, scale_out ladders, entry-point
+    plugins whose modules are importable on executors) and the whole
+    order surface (resting limit/stop/stop_limit entries, #318
+    modify/cancel, broker SL/TP, maker/taker fees, spot accounting, margin
+    gates, swap accrual, stress rejection, stale windows) run live with
+    batch parity by construction. The pickle is the checkpoint form of the reference's
     one in-memory live session. ``equity_sample_every`` is forced to 0 —
     a live session emits trades, and an unbounded sample buffer must not
     grow in state. A live session never END-closes (finish() is batch
@@ -455,7 +626,7 @@ def live_backtest(
     (reference #355 + algo_state_store.py Category B): a
     ``bootstrap_live_sessions`` snapshot of history is persisted
     create-only to ``bootstrap_dir`` (the durable ledger) and unioned in
-    as one-shot seed rows; a key's seed installs the pickled session
+    as one-shot seed rows; a key's seed installs the pickled book
     BEFORE any tail event of its first micro-batch, so a live bot that
     lost its Spark checkpoint resumes from the snapshot — open positions,
     balance, forming bar, resting orders, rng state, trade counter —
@@ -484,140 +655,27 @@ def live_backtest(
     QUERY #197 instead of grepping executor logs (VERDICT r10 #4; the
     reference's Phase 4 surfaces these rows to its monitoring consumer).
     The running session summary rides in the state blob
-    (``pickle.loads(state).clipping_monitor.session_summary()``), and
-    fleet-wide per-tick roll-ups come from
+    (``pickle.loads(blob)[1][symbol].clipping_monitor.session_summary()``),
+    and fleet-wide per-tick roll-ups come from
     ``operators.clipping.clipping_report`` over a per-tick ledger. The
     in-state monitor keeps only the last 256 per-tick times (the batch
     report path never reads them from state; an unbounded raw-times list
     would re-pickle ~80 KB per key per micro-batch — VERDICT r10 #7)."""
-    from ..operators.replay import ReplaySession
-
     if (bootstrap is None) != (bootstrap_dir is None):
         raise ValueError("bootstrap and bootstrap_dir must be passed together")
-
-    p = dict(params)
-    p["equity_sample_every"] = "0"
-    scen = {
-        "scenario_id": 0,
-        "parameters": p,
-        "tick_processing_budget_ms": None,
-        "max_ticks": None,
-        "latency_seed": latency_seed,
-        "latency_min_ms": latency_min_ms,
-        "latency_max_ms": latency_max_ms,
-    }
-
-    def run(key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        (symbol,) = key
-        if state.hasTimedOut:
-            # R8 ghost pass: the feed is quiet — advance the session's
-            # ghost clock and resolve any latency fills whose deadline
-            # the gap has passed (see ReplaySession.heartbeat for the
-            # batch-parity model), emitting trades NOW instead of at the
-            # next real tick.
-            if state.exists:
-                (blob,) = state.get
-                sess = pickle.loads(bytes(blob))
-                sess.heartbeat(timeout_ms)
-                rows = _trade_rows(symbol, sess.drain_trades())
-                state.update((pickle.dumps(sess),))
-                state.setTimeoutDuration(timeout_ms)
-                if rows:
-                    yield pd.DataFrame(
-                        rows, columns=[f.name for f in TRADE_SCHEMA.fields]
-                    )
-            return
-        chunks = [c for c in pdfs if len(c)]
-        if not chunks:
-            return
-        pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
-        pdf = _sorted_wire(pdf)
-
-        # lazy session holder: seeds may install the snapshot session, and
-        # checkpoint state outranks the ledger (a seed arriving for an
-        # existing key is a no-op)
-        holder = [None]
-        if state.exists:
-            (blob,) = state.get
-            holder[0] = pickle.loads(bytes(blob))
-
-        def _arm(sess):
-            # #197: the monitor rides ON the session so it checkpoints with
-            # it; snapshot-seeded / pre-clipping sessions get one attached
-            if clipping and getattr(sess, "clipping_monitor", None) is None:
-                from ..operators.clipping import ClippingMonitor
-
-                sess.clipping_monitor = ClippingMonitor(
-                    clipping_report_interval_s, keep_times=256,
-                    start_s=time.monotonic(),  # wall-clock-ok: #197 clipping report cadence (observational telemetry)
-                )
-            return sess
-
-        def session_for(_sym):
-            if holder[0] is None:
-                holder[0] = _arm(ReplaySession(scen))
-            return holder[0]
-
-        def on_seed(blob):
-            if holder[0] is None:
-                holder[0] = _arm(pickle.loads(bytes(blob)))
-
-        if holder[0] is not None:
-            _arm(holder[0])
-        _drive_session_rows(
-            pdf, session_for, on_seed,
-            monitor=clipping, clock_ns=time.perf_counter_ns,  # wall-clock-ok: #197 real processing-time measurement
-        )
-        sess = holder[0]
-        if sess is None:
-            return
-        if clipping:
-            # Phase 5 analogue: the micro-batch backlog IS this engine's
-            # queue depth — rows waiting in the batch when the key's turn
-            # came (the reference polls queue.Queue.qsize())
-            sess.clipping_monitor.record_queue_depth(len(pdf))
-            report = sess.clipping_monitor.get_periodic_report(
-                time.monotonic()  # wall-clock-ok: #197 report cadence
-            )
-            if report is not None:
-                _CLIP_LOG.info("[CLIPPING] %s %s", symbol, report)
-                if telemetry_dir is not None:
-                    from ..operators.clipping import write_report_row
-
-                    write_report_row(telemetry_dir, symbol, report)
-
-        rows = _trade_rows(symbol, sess.drain_trades())
-        state.update((pickle.dumps(sess),))
-        if timeout_ms > 0:
-            state.setTimeoutDuration(timeout_ms)
-        if rows:
-            yield pd.DataFrame(rows, columns=[f.name for f in TRADE_SCHEMA.fields])
-
-    src = ticks if signals is None else merge_signal_rows(ticks, signals)
-    if bootstrap is not None:
-        from .bootstrap import check_staleness
-
-        check_staleness(
-            bootstrap,
+    return _live_fold(
+        _wire(ticks, signals), "symbol",
+        _scenario_base(params, latency_seed, latency_min_ms, latency_max_ms),
+        None,
+        bootstrap=bootstrap, bootstrap_dir=bootstrap_dir, bootstrap_key="symbol",
+        staleness=dict(
             max_age_trading_days=max_age_trading_days,
-            weekend_aware=weekend_aware,
-            restore_now=restore_now,
-            on_stale=on_stale,
-            name="live_backtest.bootstrap",
-        )
-        src = _seed_union(
-            src, bootstrap, bootstrap_dir, key_src="symbol", key_dst="symbol"
-        )
-    return src.groupBy("symbol").applyInPandasWithState(
-        run,
-        outputStructType=TRADE_SCHEMA,
-        stateStructType=_BLOB_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if timeout_ms > 0
-            else GroupStateTimeout.NoTimeout
+            weekend_aware=weekend_aware, restore_now=restore_now,
+            on_stale=on_stale, name="live_backtest.bootstrap",
         ),
+        timeout_ms=timeout_ms, clipping=clipping,
+        clipping_report_interval_s=clipping_report_interval_s,
+        telemetry_dir=telemetry_dir,
     )
 
 
@@ -713,180 +771,20 @@ def live_backtest_account(
     sub-book (pickle's memo keeps the sharing inside the state blob);
     semantics as in ``live_backtest``.
     """
-    from ..operators.replay import AccountState, ReplaySession
-
     if (bootstrap is None) != (bootstrap_dir is None):
         raise ValueError("bootstrap and bootstrap_dir must be passed together")
-
-    p = dict(params)
-    p["equity_sample_every"] = "0"
-    if p.get("spot_mode") == "1":
-        raise ValueError(
-            "live_backtest_account is a margin-account surface; spot_mode "
-            "carries per-pair asset balances, not one shared margin account"
-        )
-    if signals is not None and account_col is not None:
-        raise ValueError(
-            "signals ride the single-account form: the (symbol, sig_ts, "
-            "score) wire carries no account column to key a multi-account "
-            "stream by"
-        )
-    start_balance = float(p.get("start_balance", 10_000.0))
-    scen_base = {
-        "parameters": p,
-        "tick_processing_budget_ms": None,
-        "max_ticks": None,
-        "latency_seed": latency_seed,
-        "latency_min_ms": latency_min_ms,
-        "latency_max_ms": latency_max_ms,
-    }
-
-    def run(key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        if state.hasTimedOut:
-            # R8 ghost pass at ACCOUNT scope: every sub-book heartbeats
-            # against its own last tick (per-symbol gap anchors), so a
-            # quiet symbol's in-gap fills resolve while its siblings
-            # keep ticking — the reference's one queue-fed loop runs its
-            # timer pass over all subscribed feeds the same way.
-            if state.exists:
-                (blob,) = state.get
-                acct, books = pickle.loads(bytes(blob))
-                out = []
-                for sym in sorted(books):
-                    books[sym].heartbeat(timeout_ms)
-                    out.extend(_trade_rows(sym, books[sym].drain_trades()))
-                state.update((pickle.dumps((acct, books)),))
-                state.setTimeoutDuration(timeout_ms)
-                if out:
-                    yield pd.DataFrame(
-                        out, columns=[f.name for f in TRADE_SCHEMA.fields]
-                    )
-            return
-        chunks = [c for c in pdfs if len(c)]
-        if not chunks:
-            return
-        pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
-        pdf = _sorted_wire(pdf, extra_key="symbol")
-
-        # lazy account holder: a snapshot seed installs (acct, books);
-        # checkpoint state outranks the ledger (seed no-op on existing key)
-        holder = [None]
-        mon_holder = [None]
-        if state.exists:
-            (blob,) = state.get
-            holder[0] = pickle.loads(bytes(blob))
-
-        def _account_monitor(books):
-            # ONE monitor per account, shared by every sub-book (#197);
-            # recover the shared instance from any restored sub-book
-            if not clipping:
-                return None
-            if mon_holder[0] is None:
-                for s in books.values():
-                    m = getattr(s, "clipping_monitor", None)
-                    if m is not None:
-                        mon_holder[0] = m
-                        break
-            if mon_holder[0] is None:
-                from ..operators.clipping import ClippingMonitor
-
-                mon_holder[0] = ClippingMonitor(
-                    clipping_report_interval_s, keep_times=256,
-                    start_s=time.monotonic(),  # wall-clock-ok: #197 clipping report cadence (observational telemetry)
-                )
-            return mon_holder[0]
-
-        def session_for(sym):
-            if holder[0] is None:
-                holder[0] = (AccountState(start_balance), {})
-            acct, books = holder[0]
-            sess = books.get(sym)
-            if sess is None:
-                sess = books[sym] = ReplaySession(
-                    {"scenario_id": len(books), **scen_base}, account=acct
-                )
-            if clipping and getattr(sess, "clipping_monitor", None) is None:
-                sess.clipping_monitor = _account_monitor(books)
-            return sess
-
-        def on_seed(blob):
-            if holder[0] is None:
-                holder[0] = pickle.loads(bytes(blob))
-
-        _drive_session_rows(
-            pdf, session_for, on_seed,
-            monitor=clipping, clock_ns=time.perf_counter_ns,  # wall-clock-ok: #197 real processing-time measurement
-        )
-        if holder[0] is None:
-            return
-        acct, books = holder[0]
-        if clipping and books:
-            mon = _account_monitor(books)
-            mon.record_queue_depth(len(pdf))  # Phase 5: batch backlog
-            report = mon.get_periodic_report(
-                time.monotonic()  # wall-clock-ok: #197 report cadence
-            )
-            if report is not None:
-                _CLIP_LOG.info("[CLIPPING] account=%s %s", key[0], report)
-                if telemetry_dir is not None:
-                    from ..operators.clipping import write_report_row
-
-                    write_report_row(telemetry_dir, key[0], report)
-
-        # R8 cross-symbol clock propagation: the account's single
-        # event-time queue IS the clock, so a sub-book whose symbol went
-        # quiet heartbeats toward the latest event this batch — its
-        # in-gap latency fills resolve at (deadline, its last quote),
-        # exactly what its own next tick would resolve retroactively
-        # (ReplaySession.heartbeat gates on heartbeat_ms/suppress).
-        # Seed rows are excluded: their stamp is the snapshot's own time.
-        ts = pdf["time_msc"]
-        if "__is_seed" in pdf.columns:
-            ts = ts[pdf["__is_seed"] == 0]
-        if len(ts):
-            batch_max_t = int(ts.max())
-            for sess in books.values():
-                base = sess.ghost_t if sess.ghost_t is not None else sess.prev_t
-                if base is not None and base < batch_max_t:
-                    sess.heartbeat(batch_max_t - base)
-
-        out = []
-        for sym in sorted(books):
-            out.extend(_trade_rows(sym, books[sym].drain_trades()))
-        state.update((pickle.dumps((acct, books)),))
-        if timeout_ms > 0:
-            state.setTimeoutDuration(timeout_ms)
-        if out:
-            yield pd.DataFrame(out, columns=[f.name for f in TRADE_SCHEMA.fields])
-
-    src = ticks if signals is None else merge_signal_rows(ticks, signals)
-    src = (
-        src.withColumn("__account", F.lit("ACCOUNT"))
-        if account_col is None
-        else src.withColumnRenamed(account_col, "__account")
-    )
-    if bootstrap is not None:
-        from .bootstrap import check_staleness
-
-        check_staleness(
-            bootstrap,
+    src, start_balance = _account_wire(ticks, params, signals, account_col)
+    return _live_fold(
+        src, "__account",
+        _scenario_base(params, latency_seed, latency_min_ms, latency_max_ms),
+        start_balance,
+        bootstrap=bootstrap, bootstrap_dir=bootstrap_dir, bootstrap_key="account",
+        staleness=dict(
             max_age_trading_days=max_age_trading_days,
-            weekend_aware=weekend_aware,
-            restore_now=restore_now,
-            on_stale=on_stale,
-            name="live_backtest_account.bootstrap",
-        )
-        src = _seed_union(
-            src, bootstrap, bootstrap_dir, key_src="account", key_dst="__account"
-        )
-    return src.groupBy("__account").applyInPandasWithState(
-        run,
-        outputStructType=TRADE_SCHEMA,
-        stateStructType=_BLOB_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if timeout_ms > 0
-            else GroupStateTimeout.NoTimeout
+            weekend_aware=weekend_aware, restore_now=restore_now,
+            on_stale=on_stale, name="live_backtest_account.bootstrap",
         ),
+        timeout_ms=timeout_ms, clipping=clipping,
+        clipping_report_interval_s=clipping_report_interval_s,
+        telemetry_dir=telemetry_dir,
     )

@@ -27,11 +27,15 @@ QUERIES = all_queries()
 #: the bucketed reconcile stream and its bootstrap-seed path: 2.8 s and
 #: 6.7 s at sf0.001 on local[4]; both stop rules of
 #: ``bars_stream.run_to_memory``, the emit-on-timeout dedup stream and the
-#: stateless quality stream: 13.7 s and 1.6 s at sf0.001 on local[4]
+#: stateless quality stream: 13.7 s and 1.6 s at sf0.001 on local[4]; the
+#: replay family's batch spot accounting (the per-symbol live book keeps
+#: it): 3.5 s at sf0.001 on local[4] (9.3 s when it is the first query
+#: of the session)
 DEFAULT_ORACLE_SLICE = (
     "streaming_live_replay",
     "streaming_live_limit",
     "streaming_live_signal",
+    "replay_spot_oracle",
     "modified_kn_perplexity",
     "trigram_mkn_perplexity",
     "streaming_reconciliation",

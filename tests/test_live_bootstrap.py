@@ -135,7 +135,7 @@ def test_generic_restart_without_checkpoint_parity(spark, tmp_path):
     assert srow["n_trades"] == n_hist
     assert srow["saved_at"] == pd.Timestamp(hist[-1][2], unit="ms")
     # the snapshot session IS the uninterrupted session at the cut
-    sess = pickle.loads(bytes(srow["blob"]))
+    sess = pickle.loads(bytes(srow["blob"]))[1][sym]
     assert len(sess.positions) == len(hist_sess.positions)
     assert sess.trades == []  # drained: history trades are the batch output
 
@@ -344,3 +344,70 @@ def test_bootstrap_staleness_gate(spark, tmp_path):
             bootstrap=snap, bootstrap_dir=str(tmp_path / "l2"),
             max_age_trading_days=2, restore_now=late, on_stale="warn",
         )
+
+
+def test_spot_mode_per_symbol_parity(spark, tmp_path):
+    """spot_mode through ``live_backtest``: each per-symbol book holds its
+    session and no shared account, so the session keeps its own
+    dual-balance (quote/base) walk. Live trades equal the batch replay's
+    non-END trades, and a snapshot of history + the tail continues them.
+    The fixture's balances are small enough that the walk rejects orders,
+    so the walk, not the strategy alone, decides which orders fill.
+    (``live_backtest_account`` rejects spot_mode: one shared margin
+    account cannot carry per-pair asset balances.)"""
+    from finiextestingide_spark.operators.replay import run_backtest, trades_table
+    from tests.test_live_socket import _TRADE_FIELDS
+
+    sym = "EURUSD"
+    params = {
+        "strategy": "sma_cross", "fast": "2", "slow": "3", "bar_ms": "1000",
+        "lots": "2.0", "fee_per_side": "0.1", "spot_mode": "1",
+        "start_balance": "2.6", "base_start": "2.5",
+    }
+    feed = _ticks(sym, 240)
+    scen = spark.createDataFrame(
+        [(1, "spot", sym, None, None, LAT["latency_seed"],
+          LAT["latency_min_ms"], LAT["latency_max_ms"], params)],
+        "scenario_id int, name string, symbol string, max_ticks int, "
+        "tick_processing_budget_ms double, latency_seed int, "
+        "latency_min_ms int, latency_max_ms int, "
+        "parameters map<string,string>",
+    )
+    res = run_backtest(spark.createDataFrame(feed, TICK_DDL), scen)
+    assert res.collect()[0]["orders_rejected"] > 0, "the walk must gate fills"
+    batch = sorted(
+        trades_table(res).where("exit_reason != 'END'").collect(),
+        key=lambda r: r["trade_id"],
+    )
+    assert {r["direction"] for r in batch} == {"LONG", "SHORT"}
+
+    def live(rows, tag, **kw):
+        ticks_dir, out = str(tmp_path / f"t_{tag}"), str(tmp_path / f"o_{tag}")
+        spark.createDataFrame(rows, TICK_DDL).write.parquet(ticks_dir)
+        stream = spark.readStream.schema(TICK_DDL).parquet(ticks_dir)
+        q = (
+            live_backtest(stream, params, **LAT, **kw)
+            .writeStream.format("parquet")
+            .option("path", out)
+            .option("checkpointLocation", str(tmp_path / f"c_{tag}"))
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        return sorted(spark.read.parquet(out).collect(), key=lambda r: r["trade_id"])
+
+    def fields(rows):
+        return [(r["trade_id"], *(r[c] for c in _TRADE_FIELDS)) for r in rows]
+
+    assert fields(live(feed, "full")) == fields(batch)
+
+    snap = bootstrap_live_sessions(
+        spark.createDataFrame(feed[:120], TICK_DDL), params, **LAT
+    )
+    n_hist = snap.collect()[0]["n_trades"]
+    assert 0 < n_hist < len(batch), "both segments must close trades"
+    tail = live(
+        feed[120:], "tail", bootstrap=snap, bootstrap_dir=str(tmp_path / "ledger")
+    )
+    assert fields(tail) == fields(batch[n_hist:])

@@ -1349,11 +1349,15 @@ def test_live_account_global_margin_gate(spark, tmp_path):
     free again). Batch parity: A alone through the batch replay with the
     same params produces the identical trade record; the no-margin control
     run proves B's long WOULD have filled (so the rejection was the margin
-    gate, not capacity)."""
+    gate, not capacity). The same margin run through ``live_backtest``
+    fills B's long too: per-symbol books share no account."""
     from datetime import datetime, timedelta
 
     from finiextestingide_spark.operators.replay import run_backtest, trades_table
-    from finiextestingide_spark.streaming.live_replay import live_backtest_account
+    from finiextestingide_spark.streaming.live_replay import (
+        live_backtest,
+        live_backtest_account,
+    )
 
     t0 = datetime(2026, 1, 5)
     # two ticks per 1-minute bar, at :00 and :30; mid == value
@@ -1377,7 +1381,7 @@ def test_live_account_global_margin_gate(spark, tmp_path):
     }
     margin_params = {**base_params, "margin_per_lot": "8000"}
 
-    def run_account(params, sub):
+    def run_live(params, sub, op=live_backtest_account):
         src = tmp_path / f"feed_{sub}"
         src.mkdir()
         half = len(rows) // 2
@@ -1395,7 +1399,7 @@ def test_live_account_global_margin_gate(spark, tmp_path):
         )
         name = f"acct_{sub}_{uuid.uuid4().hex[:8]}"
         q = (
-            live_backtest_account(stream, params)
+            op(stream, params)
             .writeStream.format("memory")
             .queryName(name)
             .outputMode("append")
@@ -1413,8 +1417,9 @@ def test_live_account_global_margin_gate(spark, tmp_path):
     old_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     try:
-        gated = run_account(margin_params, "m")
-        control = run_account(base_params, "c")
+        gated = run_live(margin_params, "m")
+        control = run_live(base_params, "c")
+        per_symbol = run_live(margin_params, "s", op=live_backtest)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old_parts)
 
@@ -1428,6 +1433,12 @@ def test_live_account_global_margin_gate(spark, tmp_path):
     assert control["B"][0]["direction"] == "LONG"
     assert control["B"][0]["exit_reason"] == "SIGNAL"
     assert len(control["A"]) == 1 and control["A"][0]["exit_reason"] == "TP"
+    # per-symbol books: each symbol's session holds its own balance, so the
+    # margin run's B long fills and closes on its bar-6 flip, as in control
+    assert "B" in per_symbol and len(per_symbol["B"]) == 1
+    assert per_symbol["B"][0]["direction"] == "LONG"
+    assert per_symbol["B"][0]["exit_reason"] == "SIGNAL"
+    assert len(per_symbol["A"]) == 1 and per_symbol["A"][0]["exit_reason"] == "TP"
 
     # batch parity for A: the same params through the per-scenario batch
     # replay (margin included; A alone fits it) — identical record
@@ -2313,7 +2324,10 @@ def test_live_account_signals_parity(spark, sf_dir, tmp_path):
     ONE account session must equal the per-symbol batch replays with the
     same signals (and stamp the driving signal on each trade)."""
     from finiextestingide_spark.operators.replay import run_backtest, trades_table
-    from finiextestingide_spark.streaming.live_replay import live_backtest_account
+    from finiextestingide_spark.streaming.live_replay import (
+        bootstrap_account_sessions,
+        live_backtest_account,
+    )
 
     params = {
         "strategy": "signal_follow", "bar_ms": "3600000",
@@ -2398,14 +2412,15 @@ def test_live_account_signals_parity(spark, sf_dir, tmp_path):
     # the account path stamps the driving signal too
     assert any(r["entry_sig_ts"] is not None for v in got.values() for r in v)
 
-    # signals + multi-account keying is rejected loudly (the signal wire
-    # carries no account column)
-    with pytest.raises(ValueError, match="single-account"):
-        live_backtest_account(
-            spark.createDataFrame([], tick_ddl).withColumn("acct", F.lit("x")),
-            params, account_col="acct",
-            signals=spark.createDataFrame([], sig_ddl),
-        )
+    # signals + multi-account keying is rejected loudly, live and by the
+    # snapshot producer (the signal wire carries no account column)
+    for op in (live_backtest_account, bootstrap_account_sessions):
+        with pytest.raises(ValueError, match="single-account"):
+            op(
+                spark.createDataFrame([], tick_ddl).withColumn("acct", F.lit("x")),
+                params, account_col="acct",
+                signals=spark.createDataFrame([], sig_ddl),
+            )
 
 
 def test_live_account_heartbeat_timeout_idle_feed(spark):
